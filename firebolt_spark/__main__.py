@@ -38,17 +38,9 @@ def cmd_validate(args) -> int:
         importlib.import_module(args.plugins).register(registry)
     pc = cfg.read(args.config)
     cfg.validate(pc, registry)
-    n = sum(1 for _ in _walk(pc.nodes))
+    n = sum(1 for _ in cfg._walk(pc.nodes))
     print(f"OK: {pc.application}: source={pc.source.name}, {n} nodes")
     return 0
-
-
-def _walk(nodes):
-    for n in nodes:
-        yield n
-        yield from _walk(n.children)
-        if n.error_handler:
-            yield n.error_handler
 
 
 def cmd_run(args) -> int:

@@ -74,16 +74,6 @@ def error_struct(message: Column, code: Column | None = None, errorinfo: Column 
     )
 
 
-def event_error_struct(event: Column, message: Column, timestamp: Column | None = None, code: Column | None = None) -> Column:
-    """The full EventError envelope as a STRUCT column."""
-    ts = timestamp if timestamp is not None else F.current_timestamp()
-    return F.struct(
-        ts.alias("timestamp"),
-        event.alias("event"),
-        error_struct(message, code=code).alias("error"),
-    )
-
-
 def event_error_json(event: Column, message: Column, code: Column | None = None) -> Column:
     """Canonical JSON of ``{"code", "message"}`` for the error member —
     the shape the reference's errorkafkaproducer emits (error.go:29-47,

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType, TimestampType
+from pyspark.sql.types import BooleanType, StructField, TimestampType
 
 CREATED_COL = "created"
 RECOVERY_COL = "recovery"
@@ -71,13 +71,3 @@ def with_payload(df: DataFrame, **payload_cols: Column) -> DataFrame:
         *[c.alias(name) for name, c in payload_cols.items()],
     )
 
-
-def payload_columns(df: DataFrame) -> list[str]:
-    """The non-envelope columns — the current payload shape."""
-    return [c for c in df.columns if c not in ENVELOPE_COLS]
-
-
-def payload_schema(df: DataFrame) -> StructType:
-    """Schema of the payload columns only (the analogue of the registry's
-    ``Produces`` reflect.Type — reference node/registry.go:25-30)."""
-    return StructType([f for f in df.schema.fields if f.name not in ENVELOPE_COLS])

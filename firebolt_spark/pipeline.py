@@ -14,8 +14,9 @@ more than one child is persisted so the shared prefix is computed once
 per branch-set rather than once per leaf.
 
 Metrics parity (reference metrics/metrics.go:106-185): per-node
-received/success/filtered/error counts are computed lazily via
-``PipelineResult.counts`` (batch) or ``df.observe`` (streaming).
+received/success/filtered/error counts are kept by the streaming runner,
+which sweeps every node's output once per micro-batch
+(streaming/runner.py); a batch caller counts the outputs it needs.
 """
 
 from __future__ import annotations
@@ -82,15 +83,6 @@ class PipelineResult:
         from firebolt_spark.functions import release
 
         release(*self.outputs.values(), *self.errors.values())
-
-    def counts(self, node_id: str) -> dict[str, int]:
-        """success/error counts for a node (Filtered = parent success
-        minus this node's success+error, computed by callers that know
-        the parent)."""
-        out = {"success": self.outputs[node_id].count()}
-        if node_id in self.errors:
-            out["error"] = self.errors[node_id].count()
-        return out
 
 
 def _to_event_error(df: DataFrame) -> DataFrame:
@@ -178,46 +170,7 @@ class Pipeline:
                 "run_batch received a streaming source — use "
                 "streaming.runner.StreamingPipelineRunner for streams"
             )
-        outputs: dict[str, DataFrame] = {}
-        errors: dict[str, DataFrame] = {}
-        leaves: list[str] = []
-        persisted: list[DataFrame] = []
-
-        def walk(rt: NodeRuntime, parent_df: DataFrame) -> None:
-            if rt.max_rows_per_batch is not None:
-                # T3 discard_on_full_buffer: shed input beyond the
-                # node's buffer capacity this trigger (node.go:206-211)
-                parent_df = parent_df.limit(rt.max_rows_per_batch)
-            out = rt.operator.transform(parent_df)
-            if ERROR_COL in out.columns:
-                ok, dlq = split_errors(out, ERROR_COL)
-                dlq_env = _to_event_error(dlq)
-                errors[rt.id] = dlq_env
-                if rt.error_handler is not None:
-                    handled = rt.error_handler.operator.transform(dlq_env)
-                    outputs[rt.error_handler.id] = handled
-                    leaves.append(rt.error_handler.id)
-            else:
-                ok = out
-            outputs[rt.id] = ok
-            if not rt.children:
-                leaves.append(rt.id)
-                return
-            if len(rt.children) > 1:
-                # replicated fan-out: compute the shared prefix once
-                ok = ok.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(ok)
-            for child in rt.children:
-                walk(child, ok)
-
-        if len(self.roots) > 1:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(df)
-        for root in self.roots:
-            walk(root, df)
-        return PipelineResult(
-            outputs=outputs, errors=errors, leaves=leaves, persisted=persisted
-        )
+        return self._walk(df)
 
     def streaming_transform(
         self, spark: SparkSession, source_df: DataFrame | None = None
@@ -245,36 +198,66 @@ class Pipeline:
         )
         if not sdf.isStreaming:
             raise ValueError("streaming_transform requires a streaming source")
+        return self._walk(sdf)
+
+    def _walk(self, df: DataFrame) -> PipelineResult:
+        """The one tree walk behind both execution modes.
+
+        Every node's output goes to all of its children; errored rows are
+        split off as EventError dead letters for the node's error handler.
+        Three points differ on a streaming input, all keyed on
+        ``df.isStreaming``: no ``limit`` for discard_on_full_buffer,
+        BATCH_ONLY sinks pass through (their writes attach outside the
+        plan), and no persist of a shared prefix (Spark shares a stream's
+        source across its sinks).
+        """
+        streaming = df.isStreaming
         outputs: dict[str, DataFrame] = {}
         errors: dict[str, DataFrame] = {}
         leaves: list[str] = []
+        persisted: list[DataFrame] = []
+
+        def apply(rt: NodeRuntime, parent_df: DataFrame) -> DataFrame:
+            if streaming and getattr(rt.operator, "BATCH_ONLY", False):
+                return parent_df
+            return rt.operator.transform(parent_df)
+
+        def shared(prefix: DataFrame) -> DataFrame:
+            # replicated fan-out: compute the shared prefix once
+            if streaming:
+                return prefix
+            prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(prefix)
+            return prefix
 
         def walk(rt: NodeRuntime, parent_df: DataFrame) -> None:
-            if getattr(rt.operator, "BATCH_ONLY", False):
-                out = parent_df  # write side attaches outside the plan
-            else:
-                out = rt.operator.transform(parent_df)
+            if rt.max_rows_per_batch is not None and not streaming:
+                # T3 discard_on_full_buffer: shed input beyond the
+                # node's buffer capacity this trigger (node.go:206-211)
+                parent_df = parent_df.limit(rt.max_rows_per_batch)
+            out = apply(rt, parent_df)
             if ERROR_COL in out.columns:
                 ok, dlq = split_errors(out, ERROR_COL)
                 dlq_env = _to_event_error(dlq)
                 errors[rt.id] = dlq_env
                 if rt.error_handler is not None:
-                    eh = rt.error_handler
-                    handled = (
-                        dlq_env
-                        if getattr(eh.operator, "BATCH_ONLY", False)
-                        else eh.operator.transform(dlq_env)
-                    )
-                    outputs[eh.id] = handled
-                    leaves.append(eh.id)
+                    outputs[rt.error_handler.id] = apply(rt.error_handler, dlq_env)
+                    leaves.append(rt.error_handler.id)
             else:
                 ok = out
             outputs[rt.id] = ok
             if not rt.children:
                 leaves.append(rt.id)
                 return
-            for child in rt.children:  # no persist on streams; Spark
-                walk(child, ok)        # shares the source across sinks
+            if len(rt.children) > 1:
+                ok = shared(ok)
+            for child in rt.children:
+                walk(child, ok)
+
+        if len(self.roots) > 1:
+            df = shared(df)
         for root in self.roots:
-            walk(root, sdf)
-        return PipelineResult(outputs=outputs, errors=errors, leaves=leaves)
+            walk(root, df)
+        return PipelineResult(
+            outputs=outputs, errors=errors, leaves=leaves, persisted=persisted
+        )

@@ -94,39 +94,14 @@ class ErrorKafkaProducerSink:
         )
 
 
-class ParquetSink:
-    """Write rows to parquet; returns the input for downstream counting.
-
-    BATCH_ONLY: in native-streaming composition this node is a
-    passthrough — attach the write via writeStream/foreachBatch instead.
-
-    Params: path (required); mode (default 'overwrite'); partition_by —
-    list of partition columns (the 100 TB lever: partition on the read
-    path's filter keys so downstream scans prune).
-    """
-
-    BATCH_ONLY = True
-
-    def __init__(self, params: dict[str, Any]):
-        self.path = params["path"]
-        self.mode = params.get("mode", "overwrite")
-        self.partition_by = params.get("partition_by")
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        writer = df.write.mode(self.mode)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
-        return df
-
-
 class FileSink:
     """Generic file writer (parquet/json/csv/orc). BATCH_ONLY in
     native-streaming composition.
 
     Params: path (required); format (default parquet); mode (overwrite);
     partition_by; options (e.g. header/compression). Partitioning on the
-    downstream filter keys is the cheap 100 TB pruning lever.
+    downstream filter keys is the cheap 100 TB pruning lever. Also
+    registered as ``parquet_sink``, whose format is the default.
     """
 
     BATCH_ONLY = True
@@ -198,7 +173,7 @@ def register_sink_node_types(registry) -> None:
     registry.register_node_type(
         "error_kafka_producer", ErrorKafkaProducerSink, EVENT_ERROR_SCHEMA, None
     )
-    registry.register_node_type("parquet_sink", ParquetSink, None, None)
+    registry.register_node_type("parquet_sink", FileSink, None, None)
     registry.register_node_type("lakehouse_sink", LakehouseSink, None, None)
     registry.register_node_type("file_sink", FileSink, None, None)
     registry.register_node_type("console_sink", ConsoleSink, None, None)

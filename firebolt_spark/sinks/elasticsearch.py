@@ -38,7 +38,7 @@ returns the dead-letter rows.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
@@ -70,77 +70,6 @@ class BulkClient:
             "client_factory (tests use a fake; production wires "
             "elasticsearch-py helpers.bulk)"
         )
-
-
-@dataclass
-class InMemoryBulkClient(BulkClient):
-    """Deterministic fake for tests: records indexed docs; doc_ids in
-    ``fail_ids`` fail with ``fail_type``; first ``transient_failures``
-    bulk calls raise BulkIndexError."""
-
-    fail_ids: set = field(default_factory=set)
-    fail_type: str = MAPPER_PARSING_EXCEPTION
-    transient_failures: int = 0
-    indexed: list = field(default_factory=list)
-    calls: int = 0
-
-    def bulk(self, actions: list[dict]) -> list[DocFailure]:
-        self.calls += 1
-        if self.calls <= self.transient_failures:
-            raise BulkIndexError("simulated transport failure")
-        failures = []
-        for a in actions:
-            if a["doc_id"] in self.fail_ids:
-                failures.append(DocFailure(a["doc_id"], self.fail_type))
-            else:
-                self.indexed.append(a)
-        return failures
-
-
-@dataclass
-class FileBackedBulkClient(BulkClient):
-    """Test fake observable across process boundaries: Spark runs
-    partitions in separate Python workers, so an in-memory fake's state
-    never reaches the driver. This one records indexed docs and bulk
-    calls as files under ``spool_dir``."""
-
-    spool_dir: str = "/tmp/fb-es-spool"
-    fail_ids: set = field(default_factory=set)
-    fail_type: str = MAPPER_PARSING_EXCEPTION
-    transient_failures: int = 0
-
-    def bulk(self, actions: list[dict]) -> list[DocFailure]:
-        import os
-        import uuid
-
-        calls_dir = os.path.join(self.spool_dir, "calls")
-        indexed_dir = os.path.join(self.spool_dir, "indexed")
-        os.makedirs(calls_dir, exist_ok=True)
-        os.makedirs(indexed_dir, exist_ok=True)
-        call_no = len(os.listdir(calls_dir)) + 1
-        with open(os.path.join(calls_dir, uuid.uuid4().hex), "w") as f:
-            f.write(str(len(actions)))
-        if call_no <= self.transient_failures:
-            raise BulkIndexError("simulated transport failure")
-        failures = []
-        for a in actions:
-            if a["doc_id"] in self.fail_ids:
-                failures.append(DocFailure(a["doc_id"], self.fail_type))
-            else:
-                open(os.path.join(indexed_dir, a["doc_id"]), "w").close()
-        return failures
-
-    def indexed_ids(self) -> list[str]:
-        import os
-
-        d = os.path.join(self.spool_dir, "indexed")
-        return sorted(os.listdir(d)) if os.path.isdir(d) else []
-
-    def call_count(self) -> int:
-        import os
-
-        d = os.path.join(self.spool_dir, "calls")
-        return len(os.listdir(d)) if os.path.isdir(d) else 0
 
 
 class ElasticsearchSink:
@@ -255,35 +184,26 @@ class ElasticsearchSink:
             retry: list[dict] = []
             for f in failures:
                 doc = next(d for d in batch if d["doc_id"] == f.doc_id)
-                if f.error_type == MAPPER_PARSING_EXCEPTION:
-                    # never retried — straight to DLQ
-                    # (elastic_index_client.go:239-255)
-                    count("es_docs_dead_lettered_total")
-                    dead.append(
-                        Row(
-                            index=doc["index"],
-                            doc_id=doc["doc_id"],
-                            error_type=f.error_type,
-                            message=f.message,
-                        )
+                # mapper_parsing_exception is never retried — straight to
+                # DLQ (elastic_index_client.go:239-255); other per-doc
+                # failures go there once their retries are spent
+                if f.error_type != MAPPER_PARSING_EXCEPTION:
+                    attempts_left[f.doc_id] = attempts_left.get(
+                        f.doc_id, self.doc_retries + 1
+                    ) - 1
+                    if attempts_left[f.doc_id] > 0:
+                        count("es_doc_retries_total")
+                        retry.append(doc)
+                        continue
+                count("es_docs_dead_lettered_total")
+                dead.append(
+                    Row(
+                        index=doc["index"],
+                        doc_id=doc["doc_id"],
+                        error_type=f.error_type,
+                        message=f.message,
                     )
-                    continue
-                attempts_left[f.doc_id] = attempts_left.get(
-                    f.doc_id, self.doc_retries + 1
-                ) - 1
-                if attempts_left[f.doc_id] <= 0:
-                    count("es_docs_dead_lettered_total")
-                    dead.append(
-                        Row(
-                            index=doc["index"],
-                            doc_id=doc["doc_id"],
-                            error_type=f.error_type,
-                            message=f.message,
-                        )
-                    )
-                else:
-                    count("es_doc_retries_total")
-                    retry.append(doc)
+                )
             if retry:
                 flush(retry, attempts_left)
 

@@ -6,9 +6,8 @@ these come native from Structured Streaming; this module packages the
 idioms so pipelines get them declaratively:
 
 - ``with_watermark``      — bound state by tolerated lateness;
-- ``tumbling_counts``     — windowed aggregation (same expression works
+- ``tumbling_agg``        — windowed aggregation (same expression works
   in batch: see queries.relational.q_window_tumbling);
-- ``session_counts``      — session windows by inactivity gap;
 - late rows beyond the watermark are dropped by Spark and the dropped
   count is observable in each progress' ``stateOperators`` — the
   engine's metrics listener surfaces it.
@@ -70,21 +69,6 @@ def streaming_exact_dedup(
     horizon) state per executor.
     """
     return sdf.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def session_agg(
-    sdf: DataFrame,
-    ts_col: str,
-    gap: str,
-    group_cols: list[str],
-    watermark: str | None = None,
-) -> DataFrame:
-    """Session windows by inactivity gap (session_window), streaming-safe
-    with a watermark."""
-    src = sdf.withWatermark(ts_col, watermark) if watermark else sdf
-    return src.groupBy(
-        F.session_window(ts_col, gap).alias("w"), *group_cols
-    ).agg(F.count(F.lit(1)).alias("n_events"))
 
 
 def stream_interval_join(

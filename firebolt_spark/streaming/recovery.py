@@ -41,17 +41,14 @@ from firebolt_spark.streaming.offsets import (
     plan_assignment,
 )
 
-_STATE_SCHEMA = "partition_id INT, from_offset BIGINT, to_offset BIGINT, done BOOLEAN"
-
-
 class RecoveryTracker:
-    """Durable recovery-range bookkeeping on a parquet state table.
+    """Durable recovery-range bookkeeping in a JSON state file.
 
     The rebuild of reference recoverytracker.go:17-262: add (with
     overlap merge), consume in order, complete, cancel-all. State is a
-    tiny parquet table rewritten atomically per mutation — at any real
-    scale this is metadata (ranges, not data), so a driver-side rewrite
-    is correct and cheap; readers are Spark jobs.
+    tiny file rewritten atomically per mutation — at any real scale this is
+    metadata (ranges, not data), so a driver-side rewrite is correct
+    and cheap.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str):
@@ -121,10 +118,6 @@ class RecoveryTracker:
     def cancel_all(self) -> None:
         """recoverycancelall (recoverytracker.go:147-201)."""
         self._write([r for r in self._read() if r["done"]])
-
-    def state_dataframe(self) -> DataFrame:
-        rows = self._read()
-        return self.spark.createDataFrame(rows or [], _STATE_SCHEMA)
 
 
 @dataclass

@@ -89,22 +89,23 @@ class StreamingPipelineRunner:
                 # materialized lazily by the first action; every node and
                 # the metrics sweep then read the cached source
                 src = src.persist()
-            result = self.pipeline.run_batch(spark, source_df=src)
-            for node_id, sink in self.sinks.items():
-                if node_id in result.outputs:
-                    sink(result.outputs[node_id], batch_id)
-            if self.collect_metrics:
-                self._sweep_metrics(src, result)
-            if self.collect_metrics:
+            result = None
+            try:
+                result = self.pipeline.run_batch(spark, source_df=src)
+                for node_id, sink in self.sinks.items():
+                    if node_id in result.outputs:
+                        sink(result.outputs[node_id], batch_id)
+                if self.collect_metrics:
+                    self._sweep_metrics(src, result)
+            finally:
+                # on every path out, a raising sink included: the cached
+                # source (a no-op when metrics are off), the fan-out
+                # prefixes and the operator-persisted intermediates that
+                # ride on node outputs (minhash signatures, simhash
+                # fingerprints, signed corpora)
                 src.unpersist()
-            result.unpersist()  # release fan-out prefix caches (r1 leak)
-            # release operator-persisted intermediates that ride on node
-            # outputs via track_persisted (minhash signatures, simhash
-            # fingerprints, signed corpora) — without this a dedup node
-            # leaks one cached table per micro-batch (ADVICE r2)
-            from firebolt_spark.functions import release
-
-            release(*result.outputs.values(), *result.errors.values())
+                if result is not None:
+                    result.unpersist()
             self.metrics.batches += 1
             self.metrics.last_batch_seconds = time.perf_counter() - t0
 

@@ -40,7 +40,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from firebolt_spark import Pipeline
-from firebolt_spark.sinks.elasticsearch import FileBackedBulkClient
 from firebolt_spark.sources import KafkaSource
 from firebolt_spark.streaming.recovery import (
     RecoveryOrchestrator,
@@ -48,6 +47,7 @@ from firebolt_spark.streaming.recovery import (
 )
 from firebolt_spark.streaming.runner import StreamingPipelineRunner
 
+from tests.es_fakes import FileBackedBulkClient
 from tests.test_streaming_e2e import _produce_test_data
 
 BOOTSTRAP = os.environ.get("KAFKA_BOOTSTRAP")

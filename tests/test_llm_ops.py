@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from firebolt_spark.catalog import load_table
 from firebolt_spark.operators import multimodal, similarity
-from firebolt_spark.sinks.elasticsearch import (
-    ElasticsearchSink,
-    FileBackedBulkClient,
-)
+from firebolt_spark.sinks.elasticsearch import ElasticsearchSink
+from tests.es_fakes import FileBackedBulkClient
 
 
 def test_ann_results_are_subset_of_bruteforce_corpus(spark, sf_dir):

@@ -197,3 +197,26 @@ nodes:
     # doesn't shadow later plan-shape tests (InMemoryRelation would
     # replace the parquet scan and hide PushedFilters)
     res.unpersist()
+
+
+def test_parquet_sink_is_the_file_sink(spark, tmp_path):
+    """``parquet_sink`` is ``file_sink`` with its default format: the
+    batch walk writes parquet and hands the input on; native streaming
+    passes a BATCH_ONLY sink through unwritten."""
+    out = tmp_path / "out"
+    p = Pipeline.from_yaml(
+        f"""
+application: sinks
+source: {{name: rate, params: {{}}}}
+nodes:
+  - name: parquet_sink
+    id: pq
+    params: {{path: "{out}"}}
+"""
+    )
+    src = spark.createDataFrame([(i, f"r{i}") for i in range(5)], "id BIGINT, s STRING")
+    res = p.run_batch(spark, source_df=src)
+    assert res.outputs["pq"] is src
+    assert sorted(r.id for r in spark.read.parquet(str(out)).collect()) == list(range(5))
+    stream = spark.readStream.format("rate").load()
+    assert p.streaming_transform(spark, source_df=stream).outputs["pq"] is stream

@@ -95,6 +95,50 @@ def test_metrics_cost_exactly_one_sweep_job_per_batch(spark):
     assert on.metrics.node("keep_evens").success == 500
 
 
+def test_failing_sink_releases_batch_caches(spark):
+    """A sink that raises after its action must not leave the batch's
+    cached source or fan-out prefix behind: the runner releases them on
+    every path out of a micro-batch, and the error still propagates."""
+    pipeline = Pipeline.from_yaml(
+        """
+application: leak-test
+source: {name: rate, params: {rows_per_second: 1}}
+nodes:
+  - name: filter
+    id: keep
+    params: {predicate: "value % 2 = 0"}
+    children:
+      - name: project
+        id: left
+        params: {exprs: ["value"]}
+      - name: project
+        id: right
+        params: {exprs: ["value * 2 AS doubled"]}
+"""
+    )
+    batch = spark.range(0, 200).select(F.col("id").alias("value"))
+
+    def cached() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def failing(df, _batch_id):
+        df.collect()
+        raise RuntimeError("sink down")
+
+    def healthy(df, _batch_id):
+        df.collect()
+
+    before = cached()
+    ok = StreamingPipelineRunner(pipeline, sinks={"left": healthy, "right": healthy})
+    ok._process_batch(spark)(batch, 0)
+    assert cached() == before
+    bad = StreamingPipelineRunner(pipeline, sinks={"left": failing, "right": healthy})
+    with pytest.raises(RuntimeError, match="sink down"):
+        bad._process_batch(spark)(batch, 0)
+    assert cached() == before
+    assert bad.metrics.batches == 0
+
+
 def test_prometheus_exposition_for_90_7_3_pipeline(spark):
     """C4 parity (metrics/metrics.go:106-185): source emitted, per-node
     received/processed/failed/filtered in exposition format after a

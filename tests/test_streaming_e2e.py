@@ -35,12 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamReader
 
 from firebolt_spark import Pipeline
-from firebolt_spark.sinks.elasticsearch import FileBackedBulkClient
 from firebolt_spark.streaming.offsets import (
     plan_assignment,
     starting_offsets_json,
 )
 from firebolt_spark.streaming.runner import StreamingPipelineRunner
+from tests.es_fakes import FileBackedBulkClient
 
 TOPIC = "firebolt-inttest"
 SYSLOG = (
