@@ -6,6 +6,7 @@
 
 The CLI analogue of the reference's executor main (reference
 examples/main.go): register types, read config, validate, execute.
+``run`` writes each sink once (batch id 0); ``explain`` writes nothing.
 Custom node types register via a plugins module named by
 ``--plugins mod`` exposing ``register(registry)``.
 """
@@ -59,7 +60,13 @@ def cmd_run(args) -> int:
             query.stop()
         return 0
     result = pipeline.run_batch(spark)
+    written = pipeline.write_sinks(result, 0)
     for node_id in result.leaves:
+        dead = written.get(node_id)
+        if dead is not None:  # forcing this sink's frame would run it again
+            print(f"=== {node_id} ({len(dead)} dead letters) ===")
+            print(*dead[: args.show], sep="\n")
+            continue
         df = result.outputs[node_id]
         print(f"=== {node_id} ({df.count()} rows) ===")
         df.show(args.show, truncate=False)
@@ -68,7 +75,7 @@ def cmd_run(args) -> int:
 
 def cmd_explain(args) -> int:
     spark, pipeline = _build(args)
-    result = pipeline.run_batch(spark)
+    result = pipeline.run_batch(spark)  # plans only: writes nothing
     targets = [args.node] if args.node else result.leaves
     for node_id in targets:
         print(f"=== plan: {node_id} ===")

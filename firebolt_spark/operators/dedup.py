@@ -322,6 +322,8 @@ def minhash_candidate_pairs(
     function persists only the signatures it builds itself); the pair
     set is identical either way.
     """
+    if docs is None and signatures is None:
+        raise ValueError("provide docs or signatures")
     if signatures is not None:
         sig = signatures
         handles: tuple[DataFrame, ...] = ()

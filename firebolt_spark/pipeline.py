@@ -22,7 +22,7 @@ which sweeps every node's output once per micro-batch
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -155,6 +155,37 @@ class Pipeline:
         src = self._source_type.factory(self.config.source.params)
         return src.load(spark)
 
+    def nodes(self) -> Iterator[tuple[NodeRuntime, NodeRuntime | None]]:
+        """Every node as ``(node, parent)``, depth first; an error handler
+        follows the node whose dead letters it consumes. Roots: None."""
+
+        def walk(rt: NodeRuntime, parent: NodeRuntime | None):
+            yield rt, parent
+            if rt.error_handler is not None:
+                yield rt.error_handler, rt
+            for child in rt.children:
+                yield from walk(child, rt)
+
+        for root in self.roots:
+            yield from walk(root, None)
+
+    def write_sinks(self, result: PipelineResult, batch_id: int, sinks=None) -> dict:
+        """Write each sink once as batch ``batch_id``: the caller's
+        ``sinks`` (node id → ``f(df, batch_id)``) first, then the
+        ``write`` of every other node that has one; by node id, what
+        each returned."""
+        sinks = sinks or {}
+        writers = {
+            rt.id: rt.operator.write
+            for rt, _ in self.nodes()
+            if hasattr(rt.operator, "write") and rt.id not in sinks
+        }
+        return {
+            nid: write(result.outputs[nid], batch_id)
+            for nid, write in {**sinks, **writers}.items()
+            if nid in result.outputs
+        }
+
     def run_batch(
         self, spark: SparkSession, source_df: DataFrame | None = None
     ) -> PipelineResult:
@@ -163,6 +194,7 @@ class Pipeline:
         Mirrors Execute() (executor.go:142-207) with the channel tree
         replaced by DataFrame composition. Returns every node's output
         so tests can assert firebolt-style exact counts per branch.
+        Writes nothing (``write_sinks`` does).
         """
         df = source_df if source_df is not None else self.source_dataframe(spark)
         if df.isStreaming:
@@ -181,17 +213,16 @@ class Pipeline:
         projections, fanout, error-split, windowed aggregations via
         SqlNode-free exprs) apply to the stream itself, so event-time
         state (watermarks, windows) runs natively rather than per
-        micro-batch. BATCH_ONLY nodes (file/console/ES sinks) pass
-        through unchanged — attach their writes via ``writeStream`` /
-        ``foreachBatch`` on the returned DataFrames.
+        micro-batch.
 
         Returns a PipelineResult whose outputs are streaming DataFrames;
-        the caller starts queries on the ones it sinks. (foreachBatch
-        mode — streaming/runner.py — remains the general path for nodes
-        needing batch actions.) T3 load shedding (max_rows_per_batch)
-        applies only in micro-batch mode — ``limit`` is not an
-        append-mode streaming operator; pace native streams at the
-        source via ``maxOffsetsPerTrigger`` instead.
+        nothing is written: attach a sink with
+        ``writeStream.foreachBatch(node.operator.write)`` on its output.
+        The runner (streaming/runner.py) remains the path for BATCH_ONLY
+        nodes such as the Elasticsearch sink. T3 load shedding
+        (max_rows_per_batch) applies only in micro-batch mode — ``limit``
+        is not an append-mode streaming operator; pace native streams at
+        the source via ``maxOffsetsPerTrigger`` instead.
         """
         sdf = (
             source_df if source_df is not None else self.source_dataframe(spark)
@@ -205,11 +236,12 @@ class Pipeline:
 
         Every node's output goes to all of its children; errored rows are
         split off as EventError dead letters for the node's error handler.
-        Three points differ on a streaming input, all keyed on
-        ``df.isStreaming``: no ``limit`` for discard_on_full_buffer,
-        BATCH_ONLY sinks pass through (their writes attach outside the
-        plan), and no persist of a shared prefix (Spark shares a stream's
-        source across its sinks).
+        A node without ``transform`` (a sink) hands its input on; nothing
+        is written here. Three points differ on a streaming input, all
+        keyed on ``df.isStreaming``: no ``limit`` for
+        discard_on_full_buffer, BATCH_ONLY nodes pass their input through,
+        and no persist of a shared prefix (Spark shares a stream's source
+        across its sinks).
         """
         streaming = df.isStreaming
         outputs: dict[str, DataFrame] = {}
@@ -218,46 +250,39 @@ class Pipeline:
         persisted: list[DataFrame] = []
 
         def apply(rt: NodeRuntime, parent_df: DataFrame) -> DataFrame:
-            if streaming and getattr(rt.operator, "BATCH_ONLY", False):
+            skip = streaming and getattr(rt.operator, "BATCH_ONLY", False)
+            if skip or not hasattr(rt.operator, "transform"):
                 return parent_df
             return rt.operator.transform(parent_df)
 
-        def shared(prefix: DataFrame) -> DataFrame:
-            # replicated fan-out: compute the shared prefix once
-            if streaming:
+        def shared(prefix: DataFrame, readers: int) -> DataFrame:
+            # replicated fan-out: compute a prefix read by several nodes once
+            if streaming or readers < 2:
                 return prefix
             prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(prefix)
             return prefix
 
-        def walk(rt: NodeRuntime, parent_df: DataFrame) -> None:
+        feeds = {None: shared(df, len(self.roots))}  # parent id → its output
+        for rt, parent in self.nodes():
+            if parent is not None and parent.error_handler is rt:
+                continue  # applied to its parent's dead letters, below
+            parent_df = feeds[parent.id if parent else None]
             if rt.max_rows_per_batch is not None and not streaming:
                 # T3 discard_on_full_buffer: shed input beyond the
                 # node's buffer capacity this trigger (node.go:206-211)
                 parent_df = parent_df.limit(rt.max_rows_per_batch)
-            out = apply(rt, parent_df)
-            if ERROR_COL in out.columns:
-                ok, dlq = split_errors(out, ERROR_COL)
-                dlq_env = _to_event_error(dlq)
-                errors[rt.id] = dlq_env
+            ok = apply(rt, parent_df)
+            if ERROR_COL in ok.columns:
+                ok, dlq = split_errors(ok, ERROR_COL)
+                errors[rt.id] = dlq = _to_event_error(dlq)
                 if rt.error_handler is not None:
-                    outputs[rt.error_handler.id] = apply(rt.error_handler, dlq_env)
+                    outputs[rt.error_handler.id] = apply(rt.error_handler, dlq)
                     leaves.append(rt.error_handler.id)
-            else:
-                ok = out
             outputs[rt.id] = ok
             if not rt.children:
                 leaves.append(rt.id)
-                return
-            if len(rt.children) > 1:
-                ok = shared(ok)
-            for child in rt.children:
-                walk(child, ok)
-
-        if len(self.roots) > 1:
-            df = shared(df)
-        for root in self.roots:
-            walk(root, df)
+            feeds[rt.id] = shared(ok, len(rt.children))
         return PipelineResult(
             outputs=outputs, errors=errors, leaves=leaves, persisted=persisted
         )

@@ -27,12 +27,12 @@ elasticsearch.go:30-140, elastic_index_client.go:91-280):
   shares the factory's;
 - retry/reconnect/DLQ counters are Spark accumulators, so executor-side
   activity is visible driver-side: ``sink.counters()`` after any
-  ``transform``, and the metrics exposition renders them via
+  ``write``, and the metrics exposition renders them via
   ``prometheus_exposition(..., extra_counters=...)``.
 
-Used from streaming via ``foreachBatch`` (streaming/runner.py); in batch
-mode ``transform`` indexes the whole DataFrame partition-parallel and
-returns the dead-letter rows.
+``transform`` returns a LAZY dead-letter frame: every action over it
+indexes the input partition-parallel again. ``write`` is the one action
+a pipeline runs on it: it collects the dead-letter rows.
 """
 
 from __future__ import annotations
@@ -78,7 +78,7 @@ class ElasticsearchSink:
     reconnect_batch_count (10000, min 1 — reference elasticsearch.go:65),
     client_factory — zero-arg callable returning a BulkClient."""
 
-    BATCH_ONLY = True  # streaming attaches via foreachBatch
+    BATCH_ONLY = True  # df.rdd: native streaming passes the input through
 
     def __init__(self, params: dict[str, Any]):
         self.batch_size = int(params.get("batch_size", 100))
@@ -228,16 +228,6 @@ class ElasticsearchSink:
     def transform(self, df: DataFrame) -> DataFrame:
         """Bulk-index every partition in parallel; returns the DLQ rows
         (index, doc_id, error_type, message)."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        dlq_schema = StructType(
-            [
-                StructField("index", StringType()),
-                StructField("doc_id", StringType()),
-                StructField("error_type", StringType()),
-                StructField("message", StringType()),
-            ]
-        )
         sc = df.sparkSession.sparkContext
         if not self._accs or self._accs_app_id != sc.applicationId:
             # bind (or re-bind after a session restart — accumulators
@@ -257,4 +247,11 @@ class ElasticsearchSink:
         sink = self
         accs = self._accs
         rdd = df.rdd.mapPartitions(lambda rows: sink._index_partition(rows, accs))
-        return df.sparkSession.createDataFrame(rdd, schema=dlq_schema)
+        return df.sparkSession.createDataFrame(
+            rdd, "index STRING, doc_id STRING, error_type STRING, message STRING"
+        )
+
+    def write(self, df: DataFrame, batch_id: int) -> list[Row]:
+        """Index once by forcing this node's output (the ``transform``
+        frame); return its dead letters. Doc ids make a replay idempotent."""
+        return df.collect()

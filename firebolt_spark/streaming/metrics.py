@@ -50,22 +50,12 @@ def _parents(
     letters it consumes, and its received count must be derived from
     that parent's ERROR count (the dead-letter stream), not its success
     count like an ordinary child."""
-    out: dict[str, str | None] = {}
-    handlers: set[str] = set()
-    if pipeline is None:
-        return out, handlers
-
-    def walk(rt, parent_id):
-        out[rt.id] = parent_id
-        if rt.error_handler is not None:
-            out[rt.error_handler.id] = rt.id
-            handlers.add(rt.error_handler.id)
-        for child in rt.children:
-            walk(child, rt.id)
-
-    for root in pipeline.roots:
-        walk(root, None)
-    return out, handlers
+    nodes = list(pipeline.nodes()) if pipeline is not None else []
+    parents = {rt.id: parent and parent.id for rt, parent in nodes}
+    handlers = {
+        rt.id for rt, parent in nodes if parent and parent.error_handler is rt
+    }
+    return parents, handlers
 
 
 def prometheus_exposition(

@@ -51,8 +51,7 @@ class RecoveryTracker:
     and cheap.
     """
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
+    def __init__(self, state_dir: str):
         self.state_dir = state_dir
 
     def _read(self) -> list[dict]:

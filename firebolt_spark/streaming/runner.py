@@ -4,9 +4,10 @@ The reference runs its node tree continuously over a Kafka stream
 (reference executor/executor.go:142-207). Here the identical Pipeline
 (same YAML, same operators) runs under Structured Streaming via
 ``foreachBatch``: every micro-batch DataFrame flows through
-``Pipeline.run_batch`` and each node's output lands in its sink. This
-is the design SURVEY §7.0 calls "dual execution modes — same operator
-code".
+``Pipeline.run_batch``, then ``Pipeline.write_sinks`` writes each sink
+once with the real micro-batch id, the key an idempotent sink replays
+on. This is the design SURVEY §7.0 calls "dual execution modes — same
+operator code".
 
 Delivery semantics: checkpointed offsets + at-least-once to arbitrary
 sinks (effectively exactly-once to idempotent ones) — strictly stronger
@@ -60,10 +61,10 @@ class StreamingPipelineRunner:
     """Run a Pipeline over a streaming source.
 
     sinks: node_id → callable(df, batch_id) invoked with that node's
-    ok-output every micro-batch (error-handler node ids work too). Nodes
-    without a sink are still executed if they lead to a sunk node;
-    pure leaves without sinks are counted only (metrics), matching the
-    reference where a terminal node IS its sink.
+    ok-output every micro-batch (error-handler node ids work too),
+    instead of the node's own ``write``. Every other sink node writes
+    itself once per micro-batch, as in the reference where a terminal
+    node IS its sink; other leaves are counted only (metrics).
     """
 
     def __init__(
@@ -92,9 +93,7 @@ class StreamingPipelineRunner:
             result = None
             try:
                 result = self.pipeline.run_batch(spark, source_df=src)
-                for node_id, sink in self.sinks.items():
-                    if node_id in result.outputs:
-                        sink(result.outputs[node_id], batch_id)
+                self.pipeline.write_sinks(result, batch_id, self.sinks)
                 if self.collect_metrics:
                     self._sweep_metrics(src, result)
             finally:

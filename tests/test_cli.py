@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from firebolt_spark.__main__ import main
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_validate_examples():
@@ -63,6 +69,109 @@ def test_explain_example(spark, capsys):
     assert main(["explain", "/root/repo/examples/logging.yaml", "--node", "docs"]) == 0
     out = capsys.readouterr().out
     assert "Physical Plan" in out
+
+
+SINKS_YAML = """
+application: sinks
+source: {{name: parquet, params: {{path: "{src}"}}}}
+nodes:
+  - name: filter
+    id: keep
+    params: {{predicate: "id >= 0"}}
+    children:
+      - name: file_sink
+        id: files
+        params: {{path: "{files}"}}
+      - name: lakehouse_sink
+        id: lake
+        params: {{path: "{lake}"}}
+"""
+
+
+def test_run_batch_and_explain_write_nothing_run_writes_once(spark, capsys, tmp_path):
+    """Building the tree writes nothing: ``run_batch`` (its outputs
+    forced too) and ``explain`` leave both sink paths absent. ``run``
+    writes each sink once, the lakehouse table as batch 0."""
+    from firebolt_spark import Pipeline
+
+    src, files, lake = (str(tmp_path / d) for d in ("src", "files", "lake"))
+    spark.range(12).coalesce(3).write.parquet(src)
+    cfg = tmp_path / "sinks.yaml"
+    cfg.write_text(SINKS_YAML.format(src=src, files=files, lake=lake))
+
+    result = Pipeline.from_file(str(cfg)).run_batch(spark)
+    assert {n: df.count() for n, df in result.outputs.items()} == {
+        "keep": 12, "files": 12, "lake": 12
+    }
+    result.unpersist()
+    assert main(["explain", str(cfg)]) == 0
+    assert "Physical Plan" in capsys.readouterr().out
+    assert not os.path.exists(files) and not os.path.exists(lake)
+
+    assert main(["run", str(cfg), "--show", "0"]) == 0
+    out = capsys.readouterr().out
+    assert "=== files (12 rows) ===" in out and "=== lake (12 rows) ===" in out
+    assert spark.read.parquet(files).count() == 12
+    assert [d for d in os.listdir(lake) if d.startswith("_batch_id")] == ["_batch_id=0"]
+    assert spark.read.parquet(lake).count() == 12
+
+
+def test_run_indexes_an_es_leaf_once(spark, capsys, tmp_path):
+    """``run`` writes the Elasticsearch leaf once and prints the dead
+    letters that write returned: printing must not force the lazy
+    indexing frame again."""
+    from functools import partial
+
+    from firebolt_spark.registry import get_registry
+    from firebolt_spark.sinks.elasticsearch import ElasticsearchSink
+    from tests.es_fakes import FileBackedBulkClient
+
+    spool = str(tmp_path / "spool")
+    get_registry().register_node_type(
+        "spooled_elasticsearch",
+        lambda params: ElasticsearchSink(
+            {"batch_size": 5, "client_factory": partial(FileBackedBulkClient, spool)}
+        ),
+        None,
+        None,
+    )
+    src = str(tmp_path / "docs")
+    spark.range(12).selectExpr(
+        "'logs' AS index", "CAST(id AS STRING) AS doc_id", "'{}' AS doc"
+    ).coalesce(3).write.parquet(src)
+    cfg = tmp_path / "es.yaml"
+    cfg.write_text(
+        f"""
+application: es
+source: {{name: parquet, params: {{path: "{src}"}}}}
+nodes:
+  - name: spooled_elasticsearch
+    id: es
+"""
+    )
+    assert main(["run", str(cfg), "--show", "5"]) == 0
+    calls = os.path.join(spool, "calls")
+    indexed = sum(int(open(os.path.join(calls, f)).read()) for f in os.listdir(calls))
+    assert indexed == 12
+    assert "=== es (0 dead letters) ===" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [["r0", "--suffix"], ["r0", "--suffix", "--all"], ["r0", "--suffix=--all"]],
+)
+def test_capture_plans_rejects_suffix_without_value(argv, capsys):
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", os.path.join(REPO, "tools", "capture_plans.py")
+    )
+    capture_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(capture_plans)
+    with pytest.raises(SystemExit) as exc:
+        capture_plans.main(argv)
+    assert exc.value.code == 2
+    assert "--suffix" in capsys.readouterr().err
 
 
 def test_bench_compact_summary_fits_driver_tail():

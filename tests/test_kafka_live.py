@@ -322,7 +322,7 @@ def test_recovery_envelope_against_live_broker(spark, tmp_path):
     )
     orch = RecoveryOrchestrator(
         pipeline,
-        RecoveryTracker(spark, str(tmp_path / "tracker")),
+        RecoveryTracker(str(tmp_path / "tracker")),
         max_partition_lag=100,      # maxpartitionlag
         max_records_per_partition=500,  # parallelrecoverymaxrecords
     )

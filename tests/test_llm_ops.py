@@ -379,6 +379,13 @@ def test_bucket_cap_noop_preserves_exact_results(spark, sf_dir):
     assert capped == uncapped
 
 
+def test_minhash_candidate_pairs_needs_docs_or_signatures():
+    from firebolt_spark.operators import dedup
+
+    with pytest.raises(ValueError, match="provide docs or signatures"):
+        dedup.minhash_candidate_pairs(None)
+
+
 def test_release_frees_operator_caches(spark, sf_dir):
     """track_persisted/release (ADVICE r2): the persisted intermediates
     backing simhash_pairs / embedding_near_dups are freed on release —

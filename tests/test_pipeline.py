@@ -201,8 +201,8 @@ nodes:
 
 def test_parquet_sink_is_the_file_sink(spark, tmp_path):
     """``parquet_sink`` is ``file_sink`` with its default format: the
-    batch walk writes parquet and hands the input on; native streaming
-    passes a BATCH_ONLY sink through unwritten."""
+    batch walk hands the input on and writes nothing; the node's
+    ``write`` writes parquet; native streaming hands the stream on."""
     out = tmp_path / "out"
     p = Pipeline.from_yaml(
         f"""
@@ -217,6 +217,8 @@ nodes:
     src = spark.createDataFrame([(i, f"r{i}") for i in range(5)], "id BIGINT, s STRING")
     res = p.run_batch(spark, source_df=src)
     assert res.outputs["pq"] is src
+    assert not out.exists()
+    p.roots[0].operator.write(res.outputs["pq"], 0)
     assert sorted(r.id for r in spark.read.parquet(str(out)).collect()) == list(range(5))
     stream = spark.readStream.format("rate").load()
     assert p.streaming_transform(spark, source_df=stream).outputs["pq"] is stream

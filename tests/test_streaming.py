@@ -233,7 +233,7 @@ def _offsets_view(spark, sf_dir):
 def test_recovery_cycle(spark, sf_dir, tmp_path):
     src = _offsets_view(spark, sf_dir)
     pipeline = Pipeline.from_yaml(PIPE_YAML % {"path": f"{sf_dir}/events.parquet"})
-    tracker = RecoveryTracker(spark, str(tmp_path / "state"))
+    tracker = RecoveryTracker(str(tmp_path / "state"))
     orch = RecoveryOrchestrator(pipeline, tracker, max_partition_lag=100)
 
     highs = {
@@ -267,7 +267,7 @@ def test_recovery_cycle(spark, sf_dir, tmp_path):
 
 def test_recovery_max_records_cap(spark, sf_dir, tmp_path):
     pipeline = Pipeline.from_yaml(PIPE_YAML % {"path": f"{sf_dir}/events.parquet"})
-    tracker = RecoveryTracker(spark, str(tmp_path / "state"))
+    tracker = RecoveryTracker(str(tmp_path / "state"))
     orch = RecoveryOrchestrator(
         pipeline, tracker, max_partition_lag=10, max_records_per_partition=50
     )
@@ -524,7 +524,7 @@ def test_stateful_running_counter(spark, tmp_path):
 
 
 def test_tracker_merge_and_cancel(spark, tmp_path):
-    tracker = RecoveryTracker(spark, str(tmp_path / "state"))
+    tracker = RecoveryTracker(str(tmp_path / "state"))
     tracker.add([RecoveryRange(0, 0, 10), RecoveryRange(0, 5, 20)])
     assert tracker.pending() == [RecoveryRange(0, 0, 20)]
     tracker.add([RecoveryRange(0, 15, 30), RecoveryRange(1, 0, 5)])
@@ -747,6 +747,85 @@ nodes:
     assert sorted(seen) == list(range(20))
 
 
+SINK_TREE_YAML = """
+application: sink-tree
+source: {{name: rate, params: {{}}}}
+nodes:
+  - name: filter
+    id: keep
+    params: {{predicate: "id >= 0"}}
+    children:
+      - name: file_sink
+        id: files
+        params: {{path: "{root}/files", mode: append}}
+      - name: lakehouse_sink
+        id: lake
+        params: {{path: "{root}/lake"}}
+"""
+
+
+def test_runner_writes_each_sink_once_per_micro_batch_with_its_id(spark, tmp_path):
+    """With no caller sink, the runner writes every sink node once per
+    micro-batch with the real batch id: the lakehouse table keeps every
+    row in one ``_batch_id`` slice per micro-batch, and an appending
+    file sink keeps every row. A caller's sink for a node replaces the
+    node's own write."""
+    from firebolt_spark.sources import FileSource
+
+    in_dir = str(tmp_path / "in")
+    for b in range(3):
+        spark.range(b * 10, b * 10 + 10).coalesce(1).write.mode("append").parquet(in_dir)
+
+    def run(root, sinks=None):
+        pipeline = Pipeline.from_yaml(SINK_TREE_YAML.format(root=root))
+        src = FileSource(
+            {"path": in_dir, "streaming": True, "schema": "id BIGINT",
+             "options": {"maxFilesPerTrigger": 1}}
+        ).load(spark)
+        runner = StreamingPipelineRunner(
+            pipeline, sinks=sinks, checkpoint_dir=str(root / "ckpt")
+        )
+        q = runner.start(spark, source_df=src, trigger={"availableNow": True})
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        assert q.exception() is None and runner.metrics.batches == 3
+
+    own, caller = tmp_path / "own", tmp_path / "caller"
+    run(own)
+    lake = spark.read.parquet(str(own / "lake"))
+    assert sorted(r.id for r in lake.collect()) == list(range(30))
+    slices = {r["_batch_id"]: r["count"] for r in lake.groupBy("_batch_id").count().collect()}
+    assert slices == {0: 10, 1: 10, 2: 10}
+    files = spark.read.parquet(str(own / "files"))
+    assert sorted(r.id for r in files.collect()) == list(range(30))
+
+    got: list[tuple[int, int]] = []
+    run(caller, {"lake": lambda df, b: got.append((b, df.count()))})
+    assert sorted(got) == [(0, 10), (1, 10), (2, 10)]
+    assert not (caller / "lake").exists()
+    assert spark.read.parquet(str(caller / "files")).count() == 30
+
+
+def _await_advancing(q, done, window_s: float = 45.0) -> None:
+    """Poll ``done()`` until it holds or ``window_s`` seconds pass with
+    no new micro-batch that read input. Each such batch restarts the
+    window, so a slow query that still advances is not cut off; the
+    input is finite, so the wait still ends."""
+    import time
+
+    def read_batches() -> int:
+        return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+
+    seen, deadline = read_batches(), time.monotonic() + window_s
+    while not done() and time.monotonic() < deadline:
+        time.sleep(0.5)
+        n = read_batches()
+        if n != seen:
+            seen, deadline = n, time.monotonic() + window_s
+
+
 def test_chaos_sessionize_to_idempotent_sink_survives_crash_restart(
     spark, tmp_path
 ):
@@ -759,8 +838,6 @@ def test_chaos_sessionize_to_idempotent_sink_survives_crash_restart(
     effect (each closed session present once despite the redelivery)
     AND session conservation (every source event counted exactly once
     across closed sessions + live snapshots)."""
-    import time as _time
-
     from firebolt_spark.sinks.lakehouse import IdempotentBatchWriter
     from firebolt_spark.streaming.stateful import sessionize
 
@@ -821,14 +898,11 @@ def test_chaos_sessionize_to_idempotent_sink_survives_crash_restart(
 
     b1.coalesce(1).write.parquet(str(src_dir / "f1"))
     q = start_query()
-    deadline = _time.monotonic() + 45
     try:
-        while _time.monotonic() < deadline and not deliveries:
-            _time.sleep(0.5)
+        _await_advancing(q, lambda: bool(deliveries))
         assert deliveries, "first batch never arrived"
         b2.coalesce(1).write.parquet(str(src_dir / "f2"))
-        while _time.monotonic() < deadline and q.exception() is None:
-            _time.sleep(0.5)
+        _await_advancing(q, lambda: q.exception() is not None)
         assert q.exception() is not None, "chaos crash must fail the query"
     finally:
         q.stop()
@@ -837,14 +911,9 @@ def test_chaos_sessionize_to_idempotent_sink_survives_crash_restart(
     # restart from the same checkpoint: the uncommitted batch replays
     q = start_query()
     try:
-        deadline = _time.monotonic() + 45
-        while _time.monotonic() < deadline:
-            closed_redelivered = [
-                d for d in deliveries if d[1][2]
-            ]
-            if len(closed_redelivered) >= 2:
-                break
-            _time.sleep(0.5)
+        _await_advancing(
+            q, lambda: len([d for d in deliveries if d[1][2]]) >= 2
+        )
     finally:
         q.stop()
 

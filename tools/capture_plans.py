@@ -17,6 +17,7 @@ for the index-backed ones.
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -28,35 +29,26 @@ from firebolt_spark import get_spark  # noqa: E402
 from firebolt_spark.queries import all_queries  # noqa: E402
 
 
-def main() -> None:
-    # parse --suffix in BOTH forms (--suffix=X and --suffix X); the
-    # space-separated value must not leak into the positional args
-    # where it would be misread as a query name (ADVICE r17 #1)
-    argv = sys.argv[1:]
-    args: list[str] = []
-    suffix = "before"
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--suffix"):
-            if "=" in a:
-                suffix = a.split("=", 1)[1]
-            elif i + 1 < len(argv):
-                i += 1
-                suffix = argv[i]
-        elif not a.startswith("--"):
-            args.append(a)
-        i += 1
-    cap_all = "--all" in argv
-    tag = args[0] if args else "r17"
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(description="capture query plans")
+    parser.add_argument("tag", nargs="?", default="r17")
+    parser.add_argument("queries", nargs="*")
+    parser.add_argument("--suffix", default="before")
+    parser.add_argument("--all", action="store_true", dest="cap_all")
+    args = parser.parse_intermixed_args(argv)
+    # a --suffix given no value must fail, not fall back or swallow a
+    # following option (--suffix --all, --suffix=)
+    if not args.suffix or args.suffix.startswith("--"):
+        parser.error(f"--suffix needs a value, got {args.suffix!r}")
+    tag, suffix, cap_all = args.tag, args.suffix, args.cap_all
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     queries = all_queries()
-    if len(args) > 1:
-        names = args[1:]
+    if args.queries:
+        names = args.queries
     elif cap_all:
         names = sorted(queries)
     else:
