@@ -59,13 +59,15 @@ def cmd_run(args) -> int:
         except KeyboardInterrupt:
             query.stop()
         return 0
+    from firebolt_spark.sinks import Written
+
     result = pipeline.run_batch(spark)
     written = pipeline.write_sinks(result, 0)
     for node_id in result.leaves:
-        dead = written.get(node_id)
-        if dead is not None:  # forcing this sink's frame would run it again
-            print(f"=== {node_id} ({len(dead)} dead letters) ===")
-            print(*dead[: args.show], sep="\n")
+        w = written.get(node_id)
+        if isinstance(w, Written):  # forcing this sink's frame runs it again
+            print(f"=== {node_id} ({w.rows} rows) ===")
+            print(*w.sample[: args.show], sep="\n")
             continue
         df = result.outputs[node_id]
         print(f"=== {node_id} ({df.count()} rows) ===")

@@ -156,7 +156,8 @@ class Pipeline:
         return src.load(spark)
 
     def nodes(self) -> Iterator[tuple[NodeRuntime, NodeRuntime | None]]:
-        """Every node as ``(node, parent)``, depth first; an error handler
+        """Every node as ``(node, parent)``, depth first, for callers that
+        want a flat list (sink writes, metrics parents); an error handler
         follows the node whose dead letters it consumes. Roots: None."""
 
         def walk(rt: NodeRuntime, parent: NodeRuntime | None):
@@ -255,19 +256,15 @@ class Pipeline:
                 return parent_df
             return rt.operator.transform(parent_df)
 
-        def shared(prefix: DataFrame, readers: int) -> DataFrame:
-            # replicated fan-out: compute a prefix read by several nodes once
-            if streaming or readers < 2:
+        def shared(prefix: DataFrame) -> DataFrame:
+            # replicated fan-out: compute the shared prefix once
+            if streaming:
                 return prefix
             prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(prefix)
             return prefix
 
-        feeds = {None: shared(df, len(self.roots))}  # parent id → its output
-        for rt, parent in self.nodes():
-            if parent is not None and parent.error_handler is rt:
-                continue  # applied to its parent's dead letters, below
-            parent_df = feeds[parent.id if parent else None]
+        def walk(rt: NodeRuntime, parent_df: DataFrame) -> None:
             if rt.max_rows_per_batch is not None and not streaming:
                 # T3 discard_on_full_buffer: shed input beyond the
                 # node's buffer capacity this trigger (node.go:206-211)
@@ -282,7 +279,16 @@ class Pipeline:
             outputs[rt.id] = ok
             if not rt.children:
                 leaves.append(rt.id)
-            feeds[rt.id] = shared(ok, len(rt.children))
+                return
+            if len(rt.children) > 1:
+                ok = shared(ok)
+            for child in rt.children:
+                walk(child, ok)
+
+        if len(self.roots) > 1:
+            df = shared(df)
+        for root in self.roots:
+            walk(root, df)
         return PipelineResult(
             outputs=outputs, errors=errors, leaves=leaves, persisted=persisted
         )

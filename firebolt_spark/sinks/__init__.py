@@ -7,16 +7,26 @@ sinks/elasticsearch.py). A sink writes only in ``write(df, batch_id)``,
 the ``foreachBatch`` signature, given its node's output; no
 ``transform`` writes. ``Pipeline.write_sinks`` calls it once per batch
 (the CLI as batch 0, the streaming runner with each micro-batch's id).
+A ``write`` that forces its node's output frame returns ``Written``, so
+callers count and print from that instead of forcing the frame again.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from firebolt_spark.errors import EVENT_ERROR_SCHEMA
+
+
+class Written(NamedTuple):
+    """What a ``write`` that forced its node's output frame returns: the
+    frame's row count and at most a few of its rows."""
+
+    rows: int
+    sample: list
 
 
 class KafkaProducerSink:
@@ -55,7 +65,8 @@ class KafkaProducerSink:
 
     def write(self, df: DataFrame, batch_id: int) -> None:
         if self.brokers:
-            df.write.format("kafka").option("kafka.bootstrap.servers", self.brokers).save()
+            writer = df.write.format("kafka")
+            writer.option("kafka.bootstrap.servers", self.brokers).save()
 
 
 class ErrorKafkaProducerSink:

@@ -32,16 +32,20 @@ elasticsearch.go:30-140, elastic_index_client.go:91-280):
 
 ``transform`` returns a LAZY dead-letter frame: every action over it
 indexes the input partition-parallel again. ``write`` is the one action
-a pipeline runs on it: it collects the dead-letter rows.
+a pipeline runs on it: it counts the dead letters and brings back a
+bounded sample of them.
 """
 
 from __future__ import annotations
 
+import itertools
 import time
 from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
+
+from firebolt_spark.sinks import Written
 
 MAPPER_PARSING_EXCEPTION = "mapper_parsing_exception"
 
@@ -70,6 +74,14 @@ class BulkClient:
             "client_factory (tests use a fake; production wires "
             "elasticsearch-py helpers.bulk)"
         )
+
+
+DEAD_LETTER_SAMPLE = 20  # dead-letter rows ElasticsearchSink.write returns
+
+
+def _count_and_head(rows: Iterator[Row]):
+    head = list(itertools.islice(rows, DEAD_LETTER_SAMPLE))
+    yield len(head) + sum(1 for _ in rows), head
 
 
 class ElasticsearchSink:
@@ -251,7 +263,12 @@ class ElasticsearchSink:
             rdd, "index STRING, doc_id STRING, error_type STRING, message STRING"
         )
 
-    def write(self, df: DataFrame, batch_id: int) -> list[Row]:
+    def write(self, df: DataFrame, batch_id: int) -> Written:
         """Index once by forcing this node's output (the ``transform``
-        frame); return its dead letters. Doc ids make a replay idempotent."""
-        return df.collect()
+        frame). Returns the dead-letter count and at most
+        ``DEAD_LETTER_SAMPLE`` of those rows, so a batch the cluster
+        rejects whole holds no more than that on the driver. Doc ids make
+        a replay idempotent."""
+        parts = df.rdd.mapPartitions(_count_and_head).collect()
+        head = [row for _, rows in parts for row in rows][:DEAD_LETTER_SAMPLE]
+        return Written(sum(n for n, _ in parts), head)

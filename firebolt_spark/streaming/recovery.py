@@ -119,6 +119,16 @@ class RecoveryTracker:
         self._write([r for r in self._read() if r["done"]])
 
 
+def backfill_batch_id(rng: RecoveryRange) -> int:
+    """The sink batch id of a backfill of ``rng``: negative, so its
+    lakehouse slice never replaces a live micro-batch's (those count up
+    from 0), and fixed by the range's start, so re-running the range
+    replaces its own slice. Partition ids must fit in 16 bits."""
+    if not 0 <= rng.partition_id < 1 << 16:
+        raise ValueError(f"partition id out of range: {rng.partition_id}")
+    return -1 - (rng.from_offset << 16 | rng.partition_id)
+
+
 @dataclass
 class RecoveryPlan:
     starting_offsets: dict[int, int]
@@ -172,7 +182,9 @@ class RecoveryOrchestrator:
         """One bounded backfill: rows of ``rng`` through the SAME
         pipeline DAG, stamped recovery=true (recoveryconsumer.go:311-315).
         Rate limiting at real scale = maxOffsetsPerTrigger on the
-        bounded read; here the range bound itself is the cap."""
+        bounded read; here the range bound itself is the cap. The sinks
+        are written (as ``backfill_batch_id(rng)``) before the range is
+        marked done, so a failed write leaves it pending."""
         from firebolt_spark.event import RECOVERY_COL, ensure_envelope
 
         window = source_df.filter(
@@ -182,5 +194,6 @@ class RecoveryOrchestrator:
         )
         src = ensure_envelope(window).withColumn(RECOVERY_COL, F.lit(True))
         result = self.pipeline.run_batch(spark, source_df=src)
+        self.pipeline.write_sinks(result, backfill_batch_id(rng))
         self.tracker.complete(rng)
         return result

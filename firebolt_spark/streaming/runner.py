@@ -21,7 +21,9 @@ metrics/metrics.go:106-185) are collected driver-side per batch —
 All per-node counters come from ONE sweep job per micro-batch (a union
 of global counts over the persisted shared prefix), not one ``.count()``
 action per node: round 1 ran N+2 jobs per trigger with metrics on — a
-latency multiplier a 100× node-tree would feel immediately.
+latency multiplier a 100× node-tree would feel immediately. A node whose
+own ``write`` forced its output (returned ``sinks.Written``) is counted
+from that return instead, so the sweep never runs that sink again.
 """
 
 from __future__ import annotations
@@ -31,10 +33,11 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from firebolt_spark.pipeline import Pipeline, PipelineResult
+from firebolt_spark.sinks import Written
 
 
 @dataclass
@@ -93,9 +96,9 @@ class StreamingPipelineRunner:
             result = None
             try:
                 result = self.pipeline.run_batch(spark, source_df=src)
-                self.pipeline.write_sinks(result, batch_id, self.sinks)
+                written = self.pipeline.write_sinks(result, batch_id, self.sinks)
                 if self.collect_metrics:
-                    self._sweep_metrics(src, result)
+                    self._sweep_metrics(src, result, written)
             finally:
                 # on every path out, a raising sink included: the cached
                 # source (a no-op when metrics are off), the fan-out
@@ -110,7 +113,9 @@ class StreamingPipelineRunner:
 
         return process
 
-    def _sweep_metrics(self, src: DataFrame, result: PipelineResult) -> None:
+    def _sweep_metrics(
+        self, src: DataFrame, result: PipelineResult, written: dict[str, Any]
+    ) -> None:
         """All per-node counters in ONE Spark job.
 
         Each node's ok/error output contributes a global count tagged
@@ -125,10 +130,19 @@ class StreamingPipelineRunner:
                 F.lit(node_id).alias("node_id"), F.lit(kind).alias("kind"), "n"
             )
 
+        # a node whose write forced its own output (the ES leaf) counts
+        # from what that write returned: forcing it again re-runs the sink
+        forced = {n: w.rows for n, w in written.items() if isinstance(w, Written)}
         parts = [part(src, "__source__", "source")]
-        parts += [part(df, nid, "ok") for nid, df in result.outputs.items()]
+        parts += [
+            part(df, nid, "ok")
+            for nid, df in result.outputs.items()
+            if nid not in forced
+        ]
         parts += [part(df, nid, "error") for nid, df in result.errors.items()]
-        for row in reduce(DataFrame.unionAll, parts).collect():
+        rows = reduce(DataFrame.unionAll, parts).collect()
+        rows += [Row(node_id=nid, kind="ok", n=n) for nid, n in forced.items()]
+        for row in rows:
             if row["kind"] == "source":
                 self.metrics.rows_in += row["n"]
             elif row["kind"] == "ok":

@@ -117,9 +117,9 @@ def test_run_batch_and_explain_write_nothing_run_writes_once(spark, capsys, tmp_
 
 
 def test_run_indexes_an_es_leaf_once(spark, capsys, tmp_path):
-    """``run`` writes the Elasticsearch leaf once and prints the dead
-    letters that write returned: printing must not force the lazy
-    indexing frame again."""
+    """``run`` writes the Elasticsearch leaf once and prints the
+    dead-letter count and sample that write returned: printing must not
+    force the lazy indexing frame again."""
     from functools import partial
 
     from firebolt_spark.registry import get_registry
@@ -153,7 +153,7 @@ nodes:
     calls = os.path.join(spool, "calls")
     indexed = sum(int(open(os.path.join(calls, f)).read()) for f in os.listdir(calls))
     assert indexed == 12
-    assert "=== es (0 dead letters) ===" in capsys.readouterr().out
+    assert "=== es (0 rows) ===" in capsys.readouterr().out
 
 
 @pytest.mark.parametrize(

@@ -642,6 +642,23 @@ def test_es_sink_transient_doc_failure_retries_then_dlqs(spark, tmp_path):
     assert len(client.indexed_ids()) == 3
 
 
+def test_es_sink_write_counts_dead_letters_and_keeps_a_bounded_sample(spark, tmp_path):
+    """A batch the cluster rejects whole: ``write`` indexes it once,
+    counts every dead letter and brings back at most
+    ``DEAD_LETTER_SAMPLE`` of them to the driver."""
+    from firebolt_spark.sinks.elasticsearch import DEAD_LETTER_SAMPLE
+
+    n = DEAD_LETTER_SAMPLE + 5
+    client = FileBackedBulkClient(
+        spool_dir=str(tmp_path), fail_ids={f"d{i}" for i in range(n)}
+    )
+    sink = ElasticsearchSink({"client_factory": lambda: client, "batch_size": 100})
+    written = sink.write(sink.transform(_docs_df(spark, n).repartition(3)), 0)
+    assert written.rows == n and len(written.sample) == DEAD_LETTER_SAMPLE
+    assert {r["error_type"] for r in written.sample} == {"mapper_parsing_exception"}
+    assert client.call_count() == 3  # one bulk call per partition
+
+
 def test_es_sink_whole_batch_retry_with_backoff(spark, tmp_path):
     client = FileBackedBulkClient(spool_dir=str(tmp_path), transient_failures=2)
     sink = ElasticsearchSink(

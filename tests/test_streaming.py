@@ -808,6 +808,107 @@ def test_runner_writes_each_sink_once_per_micro_batch_with_its_id(spark, tmp_pat
     assert spark.read.parquet(str(caller / "files")).count() == 30
 
 
+BACKFILL_SINKS_YAML = """
+application: backfill-sinks
+source: {{name: rate, params: {{}}}}
+nodes:
+  - name: file_sink
+    id: files
+    params: {{path: "{root}/files", mode: {mode}}}
+  - name: lakehouse_sink
+    id: lake
+    params: {{path: "{root}/lake"}}
+"""
+
+
+def test_backfill_writes_its_sinks_before_completing_the_range(spark, tmp_path):
+    """A backfill writes every sink before it marks its range done: a
+    sink that raises leaves the range pending; a run that succeeds keeps
+    every row of the range in an appending file sink and in a lakehouse
+    slice that a live micro-batch's write leaves in place."""
+    import os
+
+    from firebolt_spark.event import ensure_envelope
+
+    src = spark.range(40).select(
+        F.col("id").alias("offset"), (F.col("id") % 2).cast("int").alias("partition")
+    )
+    tracker = RecoveryTracker(str(tmp_path / "state"))
+    rng = RecoveryRange(0, 10, 30)
+    tracker.add([rng])
+
+    def orchestrator(root, mode):
+        pipeline = Pipeline.from_yaml(BACKFILL_SINKS_YAML.format(root=root, mode=mode))
+        return RecoveryOrchestrator(pipeline, tracker, max_partition_lag=100)
+
+    bad = tmp_path / "bad"
+    os.makedirs(bad / "files")  # mode error: the file sink raises
+    with pytest.raises(Exception, match="already exists"):
+        orchestrator(bad, "error").run_backfill_batch(spark, src, rng)
+    assert tracker.pending() == [rng]
+
+    ok = tmp_path / "ok"
+    orch = orchestrator(ok, "append")
+    orch.run_backfill_batch(spark, src, rng).unpersist()
+    assert tracker.pending() == []
+    expect = list(range(10, 30, 2))
+    files = spark.read.parquet(str(ok / "files"))
+    assert sorted(r.offset for r in files.collect()) == expect
+
+    # a live micro-batch 0 leaves the backfill's lakehouse slice in place
+    from firebolt_spark.streaming.recovery import backfill_batch_id
+
+    live_src = ensure_envelope(src.filter(F.col("offset") < 4))
+    live = orch.pipeline.run_batch(spark, source_df=live_src)
+    orch.pipeline.write_sinks(live, 0)
+    live.unpersist()
+    lake = spark.read.parquet(str(ok / "lake"))
+    slices = {
+        r["_batch_id"]: sorted(r["offsets"])
+        for r in lake.groupBy("_batch_id")
+        .agg(F.collect_list("offset").alias("offsets"))
+        .collect()
+    }
+    assert backfill_batch_id(rng) < 0
+    assert slices == {backfill_batch_id(rng): expect, 0: [0, 1, 2, 3]}
+
+
+def test_runner_indexes_an_es_leaf_once_per_micro_batch(spark, tmp_path):
+    """With metrics on and no caller sink, the Elasticsearch leaf is
+    indexed once per micro-batch, by its own write; the sweep counts it
+    from what that write returned instead of forcing its frame again."""
+    import os
+    from functools import partial
+
+    from firebolt_spark.sinks.elasticsearch import ElasticsearchSink
+    from tests.es_fakes import FileBackedBulkClient
+
+    pipeline = Pipeline.from_yaml(
+        """
+application: es-runner
+source: {name: rate, params: {}}
+nodes:
+  - name: elasticsearch
+    id: es
+"""
+    )
+    spool = str(tmp_path / "spool")
+    pipeline.roots[0].operator = ElasticsearchSink(
+        {"batch_size": 10, "client_factory": partial(FileBackedBulkClient, spool, {"d3"})}
+    )
+    batch = spark.range(50).selectExpr(
+        "'logs' AS index", "concat('d', id) AS doc_id", "'{}' AS doc"
+    ).coalesce(2)
+    runner = StreamingPipelineRunner(pipeline)
+    runner._process_batch(spark)(batch, 0)
+
+    calls = os.path.join(spool, "calls")
+    indexed = sum(int(open(os.path.join(calls, f)).read()) for f in os.listdir(calls))
+    assert indexed == 50
+    assert runner.metrics.rows_in == 50
+    assert runner.metrics.node("es").success == 1  # the one dead letter, d3
+
+
 def _await_advancing(q, done, window_s: float = 45.0) -> None:
     """Poll ``done()`` until it holds or ``window_s`` seconds pass with
     no new micro-batch that read input. Each such batch restarts the
