@@ -26,6 +26,8 @@ def _build(args):
     if args.plugins:
         importlib.import_module(args.plugins).register(registry)
     pipeline = Pipeline.from_file(args.config, registry)
+    # get_spark re-tunes a live session: an in-process run/explain
+    # overwrites the caller's confs
     spark = get_spark(app_name=pipeline.config.application)
     return spark, pipeline
 

@@ -28,6 +28,12 @@ def get_spark(
     - Arrow enabled: every pandas_udf / mapInPandas exchange is batched.
     - UTC session timezone: deterministic timestamp semantics across
       engines (the DuckDB oracle treats naive timestamps as UTC).
+
+    On a live session ``getOrCreate`` applies every builder option to
+    that session: shuffle partitions (from ``SPARK_GRAFT_CPUS`` unless
+    given), AQE, the broadcast threshold and ``extra_conf`` all
+    overwrite what the caller had set. Only static confs, such as
+    driver memory, are ignored.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:

@@ -21,6 +21,11 @@ def spark():
     # feature itself is covered by its focused test (which flips the
     # conf on) and by the full DuckDB oracle sweep, whose sessions use
     # the default-on path.
+    # shuffle_partitions=8 holds for the whole session: tests (such as
+    # the salted-join spread bound) rely on it. get_spark re-applies its
+    # builder options to this live session, so a test that runs code
+    # calling get_spark must restore the confs afterwards, as
+    # test_cli.py's autouse fixture does.
     s = get_spark(
         "firebolt-spark-tests",
         shuffle_partitions=8,

@@ -11,6 +11,29 @@ from firebolt_spark.__main__ import main
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+@pytest.fixture(autouse=True)
+def _restore_session_conf(request):
+    """``run``/``explain`` build their session through ``get_spark``,
+    whose ``getOrCreate`` re-applies every builder option to the live
+    session the ``spark`` fixture shares with every later test file
+    (shuffle partitions from ``SPARK_GRAFT_CPUS`` among them). Put back,
+    or unset, every runtime conf a test here changed."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    conf = request.getfixturevalue("spark").conf
+    before = conf.getAll
+    yield
+    after = conf.getAll
+    for k in before.keys() | after.keys():
+        if before.get(k) == after.get(k) or not conf.isModifiable(k):
+            continue
+        if k in before:
+            conf.set(k, before[k])
+        else:
+            conf.unset(k)
+
+
 def test_validate_examples():
     for cfg in (
         "logging",

@@ -328,6 +328,10 @@ def test_salted_join_spreads_hot_key_across_partitions(spark):
             .count()
         )
 
+    # the >= 4 bound below is worked out for the fixture's 8 reducers
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8", (
+        "another test re-tuned the shared session's shuffle partitions"
+    )
     # merge hint forces the shuffle path (broadcast would hide the
     # skew); AQE off so coalescing doesn't merge the tiny test
     # partitions back together
@@ -338,7 +342,9 @@ def test_salted_join_spreads_hot_key_across_partitions(spark):
         assert "_salt" in plan
         naive = left.join(right.hint("merge"), "k")
         assert hot_key_partitions(naive) == 1
-        assert hot_key_partitions(salted) >= 4  # 8 salt buckets, minus collisions
+        # Murmur3 (seed 42, as HashPartitioning) of (0L, s) for salts
+        # s in 0..7, pmod 8, lands on reducers {3, 5, 6, 7}: 4 of 8
+        assert hot_key_partitions(salted) >= 4
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
