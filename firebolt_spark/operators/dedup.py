@@ -2150,12 +2150,13 @@ def build_winnow_index(
     docstring promises for 100 TB (VERDICT r10 "Next #1"; carried from
     r9 #3), the text analogue of :func:`similarity.build_ivf_index`'s
     serving layout and of the reference's recovery tracker
-    (/root/reference/tracker/recoverytracker.go semantics: durable
+    (reference tracker/recoverytracker.go semantics: durable
     state so a re-run pays only the delta).
 
     Layout under ``path``: the ``(id, _self_dup, fingerprint)`` rows of
-    :func:`_winnow_fp_rows` as plain parquet (narrow strings/ids —
-    ~``2/(window+1)`` of the corpus' overlapping-gram volume), plus a
+    :func:`_winnow_fp_rows` as plain parquet (the document id, a
+    BOOLEAN and a BIGINT fingerprint per row — ~``2/(window+1)`` of
+    the corpus' overlapping-gram volume), plus a
     ``_meta`` JSON sidecar recording ``(span_words, window, id_col)``,
     written LAST so its absence marks a broken or partial build
     (:func:`append_winnow_index` and the probe both refuse without

@@ -9,9 +9,15 @@ error_handler (node/node.go:278-295).
 
 Execution is declarative: walking the tree composes DataFrames; Catalyst
 pipelines the whole thing (the reference's per-node goroutines + bounded
-channels collapse into whole-stage codegen — SURVEY §4.2). A parent with
-more than one child is persisted so the shared prefix is computed once
-per branch-set rather than once per leaf.
+channels collapse into whole-stage codegen — SURVEY §4.2). The output
+of a parent with more than one child (the source, with several roots) is
+a shared prefix that each branch would recompute. It is persisted only
+when its plan says recomputing it is unsafe or costly (``_must_persist``):
+a nondeterministic or current-time expression, a limit or sample, or a
+source that may re-read differently would give sibling branches
+different rows, and a shuffle, Python or a lambda would be paid once per
+branch. A prefix of file scans and narrow column expressions (filter,
+regex parse) is cheaper to recompute than to write to the cache.
 
 Metrics parity (reference metrics/metrics.go:106-185): per-node
 received/success/filtered/error counts are kept by the streaming runner,
@@ -83,6 +89,102 @@ class PipelineResult:
         from firebolt_spark.functions import release
 
         release(*self.outputs.values(), *self.errors.values())
+
+
+# What makes a shared fan-out prefix worth persisting rather than
+# recomputing once per branch. Not replay-safe: a current-time expression
+# is folded to one literal per query, and a limit or sample keeps
+# arbitrary rows, so sibling branches would see different values or rows.
+# Costly: a shuffle, Python or a higher-order function, paid again by
+# every branch. Plan nodes by class (simple) name; expressions by
+# Catalyst tree pattern (CurrentTimestamp, Now, CurrentDate and
+# LocalTimestamp carry CURRENT_LIKE; PythonUDF, PYTHON_UDF; LambdaFunction,
+# LAMBDA_FUNCTION).
+_PERSIST_NODES = frozenset({
+    "GlobalLimit", "LocalLimit", "Offset", "Tail", "Sample",
+    "Aggregate", "Join", "Window", "Sort", "Deduplicate", "Distinct",
+    "Intersect", "Except", "RebalancePartitions", "MapInPandas", "MapInArrow",
+})
+_PERSIST_PREFIXES = ("Repartition", "FlatMapGroupsIn", "FlatMapCoGroupsIn")
+_PERSIST_PATTERNS = ("CURRENT_LIKE", "PYTHON_UDF", "LAMBDA_FUNCTION")
+# Leaves that give the same rows to every query over them: files, a
+# foreachBatch micro-batch, local rows, a range and an existing cache.
+_REPLAYABLE_LEAVES = frozenset(
+    {"LogicalRelation", "LogicalRDD", "LocalRelation", "Range", "InMemoryRelation"}
+)
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _simple_name(jobj) -> str:
+    return jobj.getClass().getSimpleName()
+
+
+def _replayable_leaf(leaf, name: str) -> bool:
+    """A ``LogicalRelation`` only over files: a JDBC or Kafka batch
+    relation re-reads its source on every query. A ``LogicalRDD`` only
+    when no Python RDD feeds it: ``createDataFrame`` over Python rows or
+    the Elasticsearch sink's dead letters would re-run Python (and, for
+    the sink, re-index) in every branch."""
+    if name == "LogicalRelation":
+        return _simple_name(leaf.relation()) == "HadoopFsRelation"
+    if name != "LogicalRDD":
+        return name in _REPLAYABLE_LEAVES
+    rdds, seen = [leaf.rdd()], set()
+    while rdds:
+        rdd = rdds.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        if _simple_name(rdd) == "PythonRDD":
+            return False
+        rdds += [dep.rdd() for dep in _seq(rdd.dependencies())]
+    return True
+
+
+def _must_persist(df: DataFrame) -> bool:
+    """Whether a shared fan-out prefix must be persisted, decided from its
+    plan: True when recomputing it once per branch is not replay-safe
+    (nondeterministic, a current-time expression, a limit or sample, or a
+    leaf other than files, a foreachBatch micro-batch, local rows, a range
+    or a cache) or costly (a shuffle, a Python UDF or map, a lambda).
+
+    Walks the analyzed plan with caches substituted (a cached frame is an
+    ``InMemoryRelation`` leaf) node by node through py4j, subqueries
+    included. Expressions are looked up in the tree-pattern bits Catalyst
+    keeps on every plan node for its whole subtree, expressions included:
+    the bits Spark's own rules use to find current-time expressions and
+    Python UDFs. A py4j round trip per expression node would cost about
+    70 ms on the syslog parse prefix (900 calls, 4 vCPUs), every batch.
+    Plan text would not do: it drops fields beyond
+    ``spark.sql.debug.maxToStringFields``."""
+    # substitute caches into a copy of the analyzed plan: the frame's own
+    # lazy ``withCachedData`` would be fixed before the persist that may
+    # follow, so actions on the frame itself would not read the cache
+    jspark = df.sparkSession._jsparkSession
+    plan = jspark.sharedState().cacheManager().useCachedData(
+        df._jdf.queryExecution().analyzed()
+    )
+    roots, stack = [plan], [plan]
+    while stack:
+        node = stack.pop()
+        name = _simple_name(node)
+        if name in _PERSIST_NODES or name.startswith(_PERSIST_PREFIXES):
+            return True
+        children = _seq(node.children())
+        if not children and not _replayable_leaf(node, name):
+            return True
+        subqueries = _seq(node.subqueries())
+        roots += subqueries
+        stack += children + subqueries
+    trees = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+    patterns = [trees.TreePattern.withName(p) for p in _PERSIST_PATTERNS]
+    return any(
+        not root.deterministic() or any(root.containsPattern(p) for p in patterns)
+        for root in roots
+    )
 
 
 def _to_event_error(df: DataFrame) -> DataFrame:
@@ -238,11 +340,15 @@ class Pipeline:
         Every node's output goes to all of its children; errored rows are
         split off as EventError dead letters for the node's error handler.
         A node without ``transform`` (a sink) hands its input on; nothing
-        is written here. Three points differ on a streaming input, all
-        keyed on ``df.isStreaming``: no ``limit`` for
-        discard_on_full_buffer, BATCH_ONLY nodes pass their input through,
-        and no persist of a shared prefix (Spark shares a stream's source
-        across its sinks).
+        is written here. A shared prefix, the output of a node with
+        several children or a source with several roots, is persisted
+        only when ``_must_persist`` finds that its plan is unsafe or
+        costly to recompute per branch; otherwise every branch recomputes
+        it, which keeps the scan-filter-parse prefix out of the cache.
+        Three points differ on a streaming input, all keyed on
+        ``df.isStreaming``: no ``limit`` for discard_on_full_buffer,
+        BATCH_ONLY nodes pass their input through, and no persist of a
+        shared prefix (Spark shares a stream's source across its sinks).
         """
         streaming = df.isStreaming
         outputs: dict[str, DataFrame] = {}
@@ -257,8 +363,9 @@ class Pipeline:
             return rt.operator.transform(parent_df)
 
         def shared(prefix: DataFrame) -> DataFrame:
-            # replicated fan-out: compute the shared prefix once
-            if streaming:
+            # replicated fan-out: compute the shared prefix once only
+            # where recomputing it per branch is unsafe or costly
+            if streaming or not _must_persist(prefix):
                 return prefix
             prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(prefix)

@@ -4,11 +4,15 @@ success/filtered/error splits)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 
+import pytest
+import yaml
 from pyspark.sql import functions as F
 
 from firebolt_spark import Pipeline
+from firebolt_spark import config as cfg
 from firebolt_spark.catalog import load_table
 from firebolt_spark.errors import split_errors
 from firebolt_spark.operators.sync import PythonMapNode
@@ -222,3 +226,85 @@ nodes:
     assert sorted(r.id for r in spark.read.parquet(str(out)).collect()) == list(range(5))
     stream = spark.readStream.format("rate").load()
     assert p.streaming_transform(spark, source_df=stream).outputs["pq"] is stream
+
+
+_WIDE_LAMBDA = [f"{i} AS c{i}" for i in range(30)] + [
+    "transform(array(1, 2), x -> x + event_id) AS t"
+]
+
+
+@pytest.mark.parametrize(
+    "case, source, chain, persists",
+    [
+        # files -> filter -> regex parse: each branch recomputes it
+        ("scan_filter_parse", "files", [
+            {"name": "filter", "params": {"predicate": "value >= 0"}},
+            {"name": "syslog_parser", "params": {"column": "event_type"}},
+        ], False),
+        ("rand", "files", [
+            {"name": "project", "params": {"exprs": ["event_id", "rand() AS r"]}},
+        ], True),
+        # ensure_envelope stamps current_timestamp() as `created`
+        ("memory_no_created", "memory", [
+            {"name": "project", "params": {"exprs": ["id"]}},
+        ], True),
+        ("files_no_created", "files_no_created", [
+            {"name": "project", "params": {"exprs": ["event_id"]}},
+        ], True),
+        # rows made in Python: each branch would re-run the Python RDD
+        ("memory_created", "memory_created", [
+            {"name": "project", "params": {"exprs": ["id"]}},
+        ], True),
+        ("python_map", "files", [
+            {"name": "python_map", "params": {"schema": "event_id BIGINT"}},
+        ], True),
+        ("discard_on_full_buffer", "files", [
+            {"name": "project", "params": {"exprs": ["event_id"]},
+             "buffersize": 5, "discard_on_full_buffer": True},
+        ], True),
+        # 31 columns: plan text drops the lambda past maxToStringFields
+        ("wide_lambda", "files", [
+            {"name": "project", "params": {"exprs": _WIDE_LAMBDA}},
+        ], True),
+    ],
+)
+def test_fanout_prefix_persists_only_when_unsafe_or_costly(
+    spark, sf_dir, case, source, chain, persists
+):
+    """A shared fan-out prefix is persisted only when its plan makes
+    recomputing it per branch unsafe (nondeterministic, current time,
+    limit) or costly (Python, lambdas); otherwise each branch recomputes
+    it. Either way both children see the same rows."""
+    path = f"{sf_dir}/events.parquet"
+    sources = {
+        "files": {"name": "parquet", "params": {"path": path, "created_col": "ts"}},
+        # pruned so that no frame another test left cached matches it
+        "files_no_created": {
+            "name": "parquet", "params": {"path": path, "columns": ["event_id"]}
+        },
+        "memory": {"name": "memory", "params": {"rows": [{"id": 1}, {"id": 2}]}},
+        "memory_created": {"name": "memory", "params": {"rows": [
+            {"id": i, "created": datetime.datetime(2026, 1, 1)} for i in (1, 2)
+        ]}},
+    }
+    nodes = [{**n, "id": f"n{i}"} for i, n in enumerate(chain)]
+    nodes[-1]["children"] = [
+        {"name": "filter", "id": cid, "params": {"predicate": "true"}}
+        for cid in ("a", "b")
+    ]
+    for parent, child in zip(nodes, nodes[1:]):
+        parent["children"] = [child]
+    conf = cfg.parse(yaml.safe_dump(
+        {"application": case, "source": sources[source], "nodes": nodes[:1]}
+    ))
+    if case == "python_map":
+        conf.nodes[0].params["fn"] = lambda row: {"event_id": row["event_id"]}
+    res = Pipeline(conf).run_batch(spark)
+    try:
+        assert len(res.persisted) == (1 if persists else 0)
+        a, b = (sorted(res.outputs[c].collect()) for c in ("a", "b"))
+        assert a == b
+        if source in ("memory", "files_no_created"):  # current_timestamp()
+            assert a and len({r["created"] for r in a}) == 1
+    finally:
+        res.unpersist()
