@@ -11,13 +11,8 @@ Execution is declarative: walking the tree composes DataFrames; Catalyst
 pipelines the whole thing (the reference's per-node goroutines + bounded
 channels collapse into whole-stage codegen — SURVEY §4.2). The output
 of a parent with more than one child (the source, with several roots) is
-a shared prefix that each branch would recompute. It is persisted only
-when its plan says recomputing it is unsafe or costly (``_must_persist``):
-a nondeterministic or current-time expression, a limit or sample, or a
-source that may re-read differently would give sibling branches
-different rows, and a shuffle, Python or a lambda would be paid once per
-branch. A prefix of file scans and narrow column expressions (filter,
-regex parse) is cheaper to recompute than to write to the cache.
+a shared prefix; it is persisted only when ``_must_persist`` says so,
+and otherwise every branch recomputes it.
 
 Metrics parity (reference metrics/metrics.go:106-185): per-node
 received/success/filtered/error counts are kept by the streaming runner,
@@ -91,27 +86,11 @@ class PipelineResult:
         release(*self.outputs.values(), *self.errors.values())
 
 
-# What makes a shared fan-out prefix worth persisting rather than
-# recomputing once per branch. Not replay-safe: a current-time expression
-# is folded to one literal per query, and a limit or sample keeps
-# arbitrary rows, so sibling branches would see different values or rows.
-# Costly: a shuffle, Python or a higher-order function, paid again by
-# every branch. Plan nodes by class (simple) name; expressions by
-# Catalyst tree pattern (CurrentTimestamp, Now, CurrentDate and
-# LocalTimestamp carry CURRENT_LIKE; PythonUDF, PYTHON_UDF; LambdaFunction,
-# LAMBDA_FUNCTION).
-_PERSIST_NODES = frozenset({
-    "GlobalLimit", "LocalLimit", "Offset", "Tail", "Sample",
-    "Aggregate", "Join", "Window", "Sort", "Deduplicate", "Distinct",
-    "Intersect", "Except", "RebalancePartitions", "MapInPandas", "MapInArrow",
-})
-_PERSIST_PREFIXES = ("Repartition", "FlatMapGroupsIn", "FlatMapCoGroupsIn")
-_PERSIST_PATTERNS = ("CURRENT_LIKE", "PYTHON_UDF", "LAMBDA_FUNCTION")
-# Leaves that give the same rows to every query over them: files, a
-# foreachBatch micro-batch, local rows, a range and an existing cache.
-_REPLAYABLE_LEAVES = frozenset(
-    {"LogicalRelation", "LogicalRDD", "LocalRelation", "Range", "InMemoryRelation"}
+_PERSIST_NODES = frozenset(
+    {"GlobalLimit", "LocalLimit", "Offset", "Tail", "Sample", "Deduplicate"}
 )
+_PERSIST_PATTERNS = ("CURRENT_LIKE", "PYTHON_UDF", "LAMBDA_FUNCTION")
+_REPLAYABLE_LEAVES = frozenset({"LocalRelation", "Range", "InMemoryRelation"})
 
 
 def _seq(scala_seq) -> list:
@@ -123,33 +102,45 @@ def _simple_name(jobj) -> str:
 
 
 def _replayable_leaf(leaf, name: str) -> bool:
-    """A ``LogicalRelation`` only over files: a JDBC or Kafka batch
-    relation re-reads its source on every query. A ``LogicalRDD`` only
-    when no Python RDD feeds it: ``createDataFrame`` over Python rows or
-    the Elasticsearch sink's dead letters would re-run Python (and, for
-    the sink, re-index) in every branch."""
     if name == "LogicalRelation":
         return _simple_name(leaf.relation()) == "HadoopFsRelation"
-    if name != "LogicalRDD":
-        return name in _REPLAYABLE_LEAVES
-    rdds, seen = [leaf.rdd()], set()
-    while rdds:
-        rdd = rdds.pop()
-        if rdd.id() in seen:
-            continue
-        seen.add(rdd.id())
-        if _simple_name(rdd) == "PythonRDD":
-            return False
-        rdds += [dep.rdd() for dep in _seq(rdd.dependencies())]
-    return True
+    return name in _REPLAYABLE_LEAVES
 
 
 def _must_persist(df: DataFrame) -> bool:
-    """Whether a shared fan-out prefix must be persisted, decided from its
-    plan: True when recomputing it once per branch is not replay-safe
-    (nondeterministic, a current-time expression, a limit or sample, or a
-    leaf other than files, a foreachBatch micro-batch, local rows, a range
-    or a cache) or costly (a shuffle, a Python UDF or map, a lambda).
+    """Whether a shared fan-out prefix (the output of a node with several
+    children, or the source with several roots) is persisted rather than
+    recomputed by every branch.
+
+    It is persisted when recomputing it could give sibling branches
+    different rows:
+
+    - a nondeterministic expression (``rand``, ``uuid``, a UDF so
+      declared);
+    - a current-time expression (``CurrentTimestamp``, ``Now``,
+      ``CurrentDate``, ``LocalTimestamp``: tree pattern ``CURRENT_LIKE``),
+      which Spark folds to one literal per query; ``ensure_envelope``
+      stamps one as ``created`` on a source without that column;
+    - a limit, offset, tail or sample (``discard_on_full_buffer``'s
+      ``limit``) or a ``Deduplicate`` (one row per key, whichever comes
+      first): each keeps arbitrary rows;
+    - Python (tree pattern ``PYTHON_UDF``: a Python UDF, or the function
+      of a ``mapInPandas``/``applyInPandas`` node), which may be
+      nondeterministic whatever it declares;
+    - a leaf other than files (a ``LogicalRelation`` over a
+      ``HadoopFsRelation``), local rows, a range or a cache: a JDBC or
+      Kafka batch relation re-reads its source, and an RDD (Python rows,
+      a foreachBatch micro-batch the runner has not cached) re-runs
+      everything under it, a Kafka fetch included.
+
+    It is also persisted when it holds a lambda (a higher-order function,
+    such as ``gopher_quality``'s): on ``corpus_curation``, whose quality
+    prefix feeds three branches, caching it gave 1.36× the throughput of
+    recomputing it (PERF.md). Otherwise every branch recomputes the prefix:
+    on the logging tree a scan, filter and regex parse is cheaper to
+    recompute than to write to the cache (1.2×, PERF.md). Shuffles are
+    not counted as costly: no measured tree has one in a shared
+    prefix.
 
     Walks the analyzed plan with caches substituted (a cached frame is an
     ``InMemoryRelation`` leaf) node by node through py4j, subqueries
@@ -171,7 +162,7 @@ def _must_persist(df: DataFrame) -> bool:
     while stack:
         node = stack.pop()
         name = _simple_name(node)
-        if name in _PERSIST_NODES or name.startswith(_PERSIST_PREFIXES):
+        if name in _PERSIST_NODES:
             return True
         children = _seq(node.children())
         if not children and not _replayable_leaf(node, name):
@@ -342,13 +333,11 @@ class Pipeline:
         A node without ``transform`` (a sink) hands its input on; nothing
         is written here. A shared prefix, the output of a node with
         several children or a source with several roots, is persisted
-        only when ``_must_persist`` finds that its plan is unsafe or
-        costly to recompute per branch; otherwise every branch recomputes
-        it, which keeps the scan-filter-parse prefix out of the cache.
-        Three points differ on a streaming input, all keyed on
-        ``df.isStreaming``: no ``limit`` for discard_on_full_buffer,
-        BATCH_ONLY nodes pass their input through, and no persist of a
-        shared prefix (Spark shares a stream's source across its sinks).
+        only when ``_must_persist`` says so. Three points differ on a
+        streaming input, all keyed on ``df.isStreaming``: no ``limit``
+        for discard_on_full_buffer, BATCH_ONLY nodes pass their input
+        through, and no persist of a shared prefix (Spark shares a
+        stream's source across its sinks).
         """
         streaming = df.isStreaming
         outputs: dict[str, DataFrame] = {}
@@ -363,8 +352,8 @@ class Pipeline:
             return rt.operator.transform(parent_df)
 
         def shared(prefix: DataFrame) -> DataFrame:
-            # replicated fan-out: compute the shared prefix once only
-            # where recomputing it per branch is unsafe or costly
+            # replicated fan-out: every branch recomputes the shared
+            # prefix unless _must_persist says to compute it once
             if streaming or not _must_persist(prefix):
                 return prefix
             prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)

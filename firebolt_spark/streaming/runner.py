@@ -22,9 +22,9 @@ All per-node counters come from ONE sweep job per micro-batch (a union
 of global counts over every node output, read from the persisted
 source), not one ``.count()`` action per node: round 1 ran N+2 jobs per
 trigger with metrics on — a latency multiplier a 100× node-tree would
-feel immediately. A fan-out prefix is cached only where ``Pipeline``
-finds it unsafe or costly to recompute, so the sweep recomputes a narrow
-one once per branch. A node whose own ``write`` forced its output
+feel immediately. A fan-out prefix is persisted only when
+``pipeline._must_persist`` says so; otherwise the sweep recomputes it
+once per branch. A node whose own ``write`` forced its output
 (returned ``sinks.Written``) is counted from that return instead, so the
 sweep never runs that sink again.
 """
@@ -123,11 +123,11 @@ class StreamingPipelineRunner:
 
         Each node's ok/error output contributes a global count tagged
         with (node_id, kind); the union is collected once. Every lineage
-        starts at the persisted source; a fan-out prefix is cached too
-        where recomputing it is unsafe or costly, and otherwise it is
-        narrow column work each branch recomputes. So the sweep costs
-        one pass over cached blocks plus narrow recomputation, versus
-        the round-1 shape of one full re-execution per node per batch.
+        starts at the persisted source, so the sweep reads cached blocks
+        plus whatever each branch recomputes above them (a fan-out prefix
+        is persisted only when ``pipeline._must_persist`` says so),
+        versus the round-1 shape of one full re-execution per node per
+        batch.
         """
 
         def part(df: DataFrame, node_id: str, kind: str) -> DataFrame:

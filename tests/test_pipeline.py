@@ -61,6 +61,7 @@ def test_counts_split_exactly(spark, sf_dir):
     assert res.outputs["proj_a"].count() == ok
     assert res.outputs["proj_b"].count() == ok
     assert set(res.leaves) == {"dlq", "proj_a", "proj_b"}
+    res.unpersist()
 
 
 def test_multiple_root_nodes_each_see_full_source(spark, sf_dir):
@@ -85,6 +86,7 @@ nodes:
     assert res.outputs["root_b"].count() == total
     assert res.outputs["root_a"].count() == total
     assert set(res.leaves) == {"root_a", "root_b"}
+    res.unpersist()
 
 
 def test_dlq_event_error_json_shape(spark, sf_dir):
@@ -251,7 +253,7 @@ _WIDE_LAMBDA = [f"{i} AS c{i}" for i in range(30)] + [
         ("files_no_created", "files_no_created", [
             {"name": "project", "params": {"exprs": ["event_id"]}},
         ], True),
-        # rows made in Python: each branch would re-run the Python RDD
+        # rows made in Python: each branch would re-run the RDD
         ("memory_created", "memory_created", [
             {"name": "project", "params": {"exprs": ["id"]}},
         ], True),
@@ -271,17 +273,13 @@ _WIDE_LAMBDA = [f"{i} AS c{i}" for i in range(30)] + [
 def test_fanout_prefix_persists_only_when_unsafe_or_costly(
     spark, sf_dir, case, source, chain, persists
 ):
-    """A shared fan-out prefix is persisted only when its plan makes
-    recomputing it per branch unsafe (nondeterministic, current time,
-    limit) or costly (Python, lambdas); otherwise each branch recomputes
-    it. Either way both children see the same rows."""
+    """A shared fan-out prefix is persisted only when ``_must_persist``
+    says so; otherwise each branch recomputes it. Either way both
+    children see the same rows."""
     path = f"{sf_dir}/events.parquet"
     sources = {
         "files": {"name": "parquet", "params": {"path": path, "created_col": "ts"}},
-        # pruned so that no frame another test left cached matches it
-        "files_no_created": {
-            "name": "parquet", "params": {"path": path, "columns": ["event_id"]}
-        },
+        "files_no_created": {"name": "parquet", "params": {"path": path}},
         "memory": {"name": "memory", "params": {"rows": [{"id": 1}, {"id": 2}]}},
         "memory_created": {"name": "memory", "params": {"rows": [
             {"id": i, "created": datetime.datetime(2026, 1, 1)} for i in (1, 2)
