@@ -311,9 +311,8 @@ class Pipeline:
 
         Returns a PipelineResult whose outputs are streaming DataFrames;
         nothing is written: attach a sink with
-        ``writeStream.foreachBatch(node.operator.write)`` on its output.
-        The runner (streaming/runner.py) remains the path for BATCH_ONLY
-        nodes such as the Elasticsearch sink. T3 load shedding
+        ``writeStream.foreachBatch(node.operator.write)`` on its output,
+        the Elasticsearch leaf's dead-letter frame included. T3 load shedding
         (max_rows_per_batch) applies only in micro-batch mode — ``limit``
         is not an append-mode streaming operator; pace native streams at
         the source via ``maxOffsetsPerTrigger`` instead.
@@ -333,11 +332,10 @@ class Pipeline:
         A node without ``transform`` (a sink) hands its input on; nothing
         is written here. A shared prefix, the output of a node with
         several children or a source with several roots, is persisted
-        only when ``_must_persist`` says so. Three points differ on a
-        streaming input, all keyed on ``df.isStreaming``: no ``limit``
-        for discard_on_full_buffer, BATCH_ONLY nodes pass their input
-        through, and no persist of a shared prefix (Spark shares a
-        stream's source across its sinks).
+        only when ``_must_persist`` says so. Two points differ on a
+        streaming input, both keyed on ``df.isStreaming``: no ``limit``
+        for discard_on_full_buffer, and no persist of a shared prefix
+        (Spark shares a stream's source across its sinks).
         """
         streaming = df.isStreaming
         outputs: dict[str, DataFrame] = {}
@@ -346,8 +344,7 @@ class Pipeline:
         persisted: list[DataFrame] = []
 
         def apply(rt: NodeRuntime, parent_df: DataFrame) -> DataFrame:
-            skip = streaming and getattr(rt.operator, "BATCH_ONLY", False)
-            if skip or not hasattr(rt.operator, "transform"):
+            if not hasattr(rt.operator, "transform"):
                 return parent_df
             return rt.operator.transform(parent_df)
 

@@ -30,20 +30,20 @@ elasticsearch.go:30-140, elastic_index_client.go:91-280):
   ``write``, and the metrics exposition renders them via
   ``prometheus_exposition(..., extra_counters=...)``.
 
-``transform`` returns a LAZY dead-letter frame: every action over it
-indexes the input partition-parallel again. ``write`` is the one action
-a pipeline runs on it: it counts the dead letters and brings back a
-bounded sample of them.
+``transform`` returns a LAZY dead-letter frame, a ``mapInArrow`` plan
+over a batch or a streaming input: every action over it indexes the
+input again. ``write`` is the one action a pipeline runs on it: it
+counts the dead letters and brings back a bounded sample of them.
 """
 
 from __future__ import annotations
 
-import itertools
 import time
 from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from firebolt_spark.sinks import Written
 
@@ -77,11 +77,8 @@ class BulkClient:
 
 
 DEAD_LETTER_SAMPLE = 20  # dead-letter rows ElasticsearchSink.write returns
-
-
-def _count_and_head(rows: Iterator[Row]):
-    head = list(itertools.islice(rows, DEAD_LETTER_SAMPLE))
-    yield len(head) + sum(1 for _ in rows), head
+DEAD_LETTER_COLS = ("index", "doc_id", "error_type", "message")
+DEAD_LETTER_DDL = ", ".join(f"{c} STRING" for c in DEAD_LETTER_COLS)
 
 
 class ElasticsearchSink:
@@ -89,8 +86,6 @@ class ElasticsearchSink:
     max_batch_retries (5), initial_backoff_s (5), max_backoff_s (180),
     reconnect_batch_count (10000, min 1 — reference elasticsearch.go:65),
     client_factory — zero-arg callable returning a BulkClient."""
-
-    BATCH_ONLY = True  # df.rdd: native streaming passes the input through
 
     def __init__(self, params: dict[str, Any]):
         self.batch_size = int(params.get("batch_size", 100))
@@ -132,18 +127,12 @@ class ElasticsearchSink:
         need continuity across restarts."""
         return {name: acc.value for name, acc in self._accs.items()}
 
-    def _index_partition(
-        self, rows: Iterator[Row], accs: dict[str, Any] | None = None
-    ) -> Iterator[Row]:
-        accs = accs or {}
-
-        def count(name: str, n: int = 1) -> None:
-            if name in accs:
-                accs[name].add(n)
+    def _index_partition(self, batches: Iterator, accs: dict[str, Any]) -> Iterator:
+        import pyarrow as pa
 
         client = self.client_factory()
         batches_on_client = 0
-        dead: list[Row] = []
+        dead: list[tuple] = []
 
         def dispose(c: BulkClient) -> None:
             # real elasticsearch-py clients hold connection pools; the
@@ -165,7 +154,7 @@ class ElasticsearchSink:
                 dispose(client)
                 client = self.client_factory()
                 batches_on_client = 0
-                count("es_reconnects_total")
+                accs["es_reconnects_total"].add(1)
             return client
 
         def flush(batch: list[dict], attempts_left: dict[str, int]) -> None:
@@ -181,7 +170,7 @@ class ElasticsearchSink:
                 except BulkIndexError:
                     if attempt == self.max_batch_retries:
                         raise
-                    count("es_batch_retries_total")
+                    accs["es_batch_retries_total"].add(1)
                     # a possibly-dead connection must not burn the whole
                     # retry budget: replace the client before backing
                     # off. Failure-driven — does not advance the
@@ -190,7 +179,7 @@ class ElasticsearchSink:
                     # one connection pool per attempt.
                     dispose(c)
                     c = client = self.client_factory()
-                    count("es_failure_reconnects_total")
+                    accs["es_failure_reconnects_total"].add(1)
                     time.sleep(min(backoff, self.max_backoff_s))
                     backoff *= 2
             retry: list[dict] = []
@@ -204,18 +193,11 @@ class ElasticsearchSink:
                         f.doc_id, self.doc_retries + 1
                     ) - 1
                     if attempts_left[f.doc_id] > 0:
-                        count("es_doc_retries_total")
+                        accs["es_doc_retries_total"].add(1)
                         retry.append(doc)
                         continue
-                count("es_docs_dead_lettered_total")
-                dead.append(
-                    Row(
-                        index=doc["index"],
-                        doc_id=doc["doc_id"],
-                        error_type=f.error_type,
-                        message=f.message,
-                    )
-                )
+                accs["es_docs_dead_lettered_total"].add(1)
+                dead.append((doc["index"], doc["doc_id"], f.error_type, f.message))
             if retry:
                 flush(retry, attempts_left)
 
@@ -226,14 +208,17 @@ class ElasticsearchSink:
         # partition's final client otherwise leaks one pool per task
         # (also covers the retries-exhausted raise path) (ADVICE r6)
         try:
-            for row in rows:
-                batch.append(row.asDict(recursive=True))
-                if len(batch) >= self.batch_size:
-                    flush(batch, attempts)
-                    batch = []
+            for record_batch in batches:
+                for doc in record_batch.to_pylist():
+                    batch.append(doc)
+                    if len(batch) >= self.batch_size:
+                        flush(batch, attempts)
+                        batch = []
             if batch:
                 flush(batch, attempts)
-            yield from dead
+            if dead:
+                cols = [pa.array(c, pa.string()) for c in zip(*dead)]
+                yield pa.RecordBatch.from_arrays(cols, names=list(DEAD_LETTER_COLS))
         finally:
             dispose(client)
 
@@ -256,11 +241,9 @@ class ElasticsearchSink:
                 )
             }
             self._accs_app_id = sc.applicationId
-        sink = self
         accs = self._accs
-        rdd = df.rdd.mapPartitions(lambda rows: sink._index_partition(rows, accs))
-        return df.sparkSession.createDataFrame(
-            rdd, "index STRING, doc_id STRING, error_type STRING, message STRING"
+        return df.mapInArrow(
+            lambda batches: self._index_partition(batches, accs), DEAD_LETTER_DDL
         )
 
     def write(self, df: DataFrame, batch_id: int) -> Written:
@@ -268,7 +251,12 @@ class ElasticsearchSink:
         frame). Returns the dead-letter count and at most
         ``DEAD_LETTER_SAMPLE`` of those rows, so a batch the cluster
         rejects whole holds no more than that on the driver. Doc ids make
-        a replay idempotent."""
-        parts = df.rdd.mapPartitions(_count_and_head).collect()
-        head = [row for _, rows in parts for row in rows][:DEAD_LETTER_SAMPLE]
-        return Written(sum(n for n, _ in parts), head)
+        a replay idempotent. One DataFrame action, not a ``limit`` (that
+        would stop the indexing early), so an ``Observation`` above fires."""
+        obs = Observation()
+        # the low 33 bits of monotonically_increasing_id number the rows
+        # of a partition: keep each partition's first few, read them all
+        first = F.monotonically_increasing_id() % (1 << 33) < DEAD_LETTER_SAMPLE
+        counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        head = counted.where(first).collect()[:DEAD_LETTER_SAMPLE]
+        return Written(obs.get["rows"], head)

@@ -54,23 +54,6 @@ def tumbling_agg(
     return src.groupBy(*groups).agg(*out_aggs)
 
 
-def streaming_exact_dedup(
-    sdf: DataFrame,
-    keys: list[str],
-    ts_col: str = "created",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: drop rows whose ``keys`` were already seen
-    within the watermark horizon (dropDuplicatesWithinWatermark — state
-    is bounded by the watermark, unlike a full-history dropDuplicates).
-
-    The streaming face of operators/dedup.exact_duplicates: batch mode
-    dedups the corpus; this dedups the ingest stream with O(keys within
-    horizon) state per executor.
-    """
-    return sdf.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,

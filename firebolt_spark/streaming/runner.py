@@ -179,14 +179,3 @@ class StreamingPipelineRunner:
         if trigger:
             writer = writer.trigger(**trigger)
         return writer.start()
-
-
-def await_batches(runner: StreamingPipelineRunner, n: int, timeout_s: float = 60.0) -> bool:
-    """Test helper: wait until the runner has processed >= n batches
-    (the reference's AwaitCondition, testutil/testutil.go)."""
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        if runner.metrics.batches >= n:
-            return True
-        time.sleep(0.2)
-    return False

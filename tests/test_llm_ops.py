@@ -5,6 +5,7 @@ ES-style sink behavior under failures."""
 from __future__ import annotations
 
 import shutil
+import time
 
 from pyspark.sql import functions as F
 
@@ -744,6 +745,26 @@ def test_es_sink_whole_batch_retries_bounded(spark, tmp_path):
 
     with pytest.raises(Exception):  # BulkIndexError surfaces, not a hang
         sink.transform(_docs_df(spark, 4)).collect()
+
+
+def test_es_sink_write_fires_an_observation_above_it(spark, tmp_path):
+    """The sink's one action is a DataFrame action, so a count observed
+    on its input completes with the exact row count."""
+    from pyspark.sql import Observation
+
+    client = FileBackedBulkClient(spool_dir=str(tmp_path), fail_ids={"d2"})
+    sink = ElasticsearchSink({"client_factory": lambda: client, "batch_size": 4})
+    obs = Observation("es_input")
+    observed = _docs_df(spark).observe(obs, F.count(F.lit(1)).alias("n"))
+    written = sink.write(sink.transform(observed), 0)
+    assert written.rows == 1
+    # poll the future rather than wait in obs.get: an action that leaves
+    # the DataFrame plan (.rdd) never completes it
+    deadline = time.monotonic() + 10
+    while not obs._jo.future().isCompleted() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert obs._jo.future().isCompleted()
+    assert obs.get == {"n": 10}
 
 
 def test_star_cc_matches_propagation(spark, sf_dir):

@@ -5,6 +5,8 @@ inttest/integration_test.go:125-212, scaled to a file-backed source)."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +14,19 @@ from firebolt_spark import Pipeline
 from firebolt_spark.catalog import load_table
 from firebolt_spark.streaming.offsets import RecoveryRange
 from firebolt_spark.streaming.recovery import RecoveryOrchestrator, RecoveryTracker
-from firebolt_spark.streaming.runner import StreamingPipelineRunner, await_batches
+from firebolt_spark.streaming.runner import StreamingPipelineRunner
+
+
+def await_batches(runner: StreamingPipelineRunner, n: int, timeout_s: float = 60.0) -> bool:
+    """Wait until the runner has processed >= n batches
+    (the reference's AwaitCondition, testutil/testutil.go)."""
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
+        if runner.metrics.batches >= n:
+            return True
+        time.sleep(0.2)
+    return False
+
 
 STREAM_YAML = """
 application: stream-test
@@ -436,44 +450,6 @@ nodes:
     assert len(dlq_rows) == 2
     payload = bytes(dlq_rows[0]["value"]).decode()
     assert "native stream error" in payload and '"code":"ERR_UNKNOWN"' in payload
-
-
-def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicate keys landed across files
-    are emitted once."""
-    import time
-
-    from firebolt_spark.sources import FileSource
-    from firebolt_spark.streaming.eventtime import streaming_exact_dedup
-
-    in_dir = tmp_path / "dup_in"
-    in_dir.mkdir()
-    rows = [(1, "a"), (2, "b"), (1, "a"), (3, "c"), (2, "b")]
-    spark.createDataFrame(rows, "k BIGINT, v STRING").coalesce(1).write.mode(
-        "append"
-    ).parquet(str(in_dir))
-
-    src = FileSource(
-        {"path": str(in_dir), "streaming": True, "schema": "k BIGINT, v STRING"}
-    ).load(spark)
-    deduped = streaming_exact_dedup(src, ["k"], "created", "5 seconds")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.monotonic() + 60
-        got = []
-        while time.monotonic() < deadline and len(got) < 3:
-            got = spark.sql("SELECT k FROM dedup_out").collect()
-            time.sleep(0.3)
-    finally:
-        q.stop()
-    assert sorted(r["k"] for r in got) == [1, 2, 3]
 
 
 def test_stateful_running_counter(spark, tmp_path):
@@ -907,6 +883,60 @@ nodes:
     assert indexed == 50
     assert runner.metrics.rows_in == 50
     assert runner.metrics.node("es").success == 1  # the one dead letter, d3
+
+
+def test_streaming_transform_sinks_an_es_leaf(spark, tmp_path):
+    """Native streaming indexes the Elasticsearch leaf: its dead-letter
+    frame is a streaming plan, and ``foreachBatch`` on the node's
+    ``write`` indexes every doc exactly once."""
+    import os
+
+    from firebolt_spark.sinks.elasticsearch import ElasticsearchSink
+    from firebolt_spark.sources import FileSource
+    from tests.es_fakes import FileBackedBulkClient
+
+    schema = "index STRING, doc_id STRING, doc STRING"
+    in_dir = str(tmp_path / "docs_in")
+    spark.range(30).selectExpr(
+        "'logs' AS index", "concat('d', id) AS doc_id", "'{}' AS doc"
+    ).coalesce(2).write.parquet(in_dir)
+
+    pipeline = Pipeline.from_yaml(
+        """
+application: es-native
+source: {name: rate, params: {}}
+nodes:
+  - name: elasticsearch
+    id: es
+"""
+    )
+    spool = str(tmp_path / "spool")
+    es = pipeline.roots[0].operator = ElasticsearchSink(
+        {"batch_size": 7, "client_factory": lambda: FileBackedBulkClient(spool, {"d3"})}
+    )
+    src = FileSource({"path": in_dir, "streaming": True, "schema": schema}).load(spark)
+    res = pipeline.streaming_transform(spark, source_df=src)
+    written = []
+    q = (
+        res.outputs["es"].writeStream
+        .foreachBatch(lambda df, batch_id: written.append(es.write(df, batch_id)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+
+    calls = os.path.join(spool, "calls")
+    sent = sum(int(open(os.path.join(calls, f)).read()) for f in os.listdir(calls))
+    assert sent == 30
+    assert FileBackedBulkClient(spool).indexed_ids() == sorted(
+        f"d{i}" for i in range(30) if i != 3
+    )
+    assert sum(w.rows for w in written) == 1
+    assert [r["doc_id"] for w in written for r in w.sample] == ["d3"]
 
 
 def _await_advancing(q, done, window_s: float = 45.0) -> None:
